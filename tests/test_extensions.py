@@ -136,7 +136,10 @@ def test_minhash_incremental_composition_identity(spark):
 
 
 def test_minhash_incremental_geometry_contract(spark):
-    """Mismatched geometry args raise, like the batch operator."""
+    """Mismatched geometry args raise, like the batch operator. A threshold
+    outside (0, 1] raises on every entry point even when explicit geometry
+    skips the chooser — else the identical-set pairs would be emitted at
+    jaccard 1.0 below the threshold."""
     from the_movie_database_import_spark.operators.dedup import (
         minhash_band_signatures,
         minhash_lsh_pairs_incremental,
@@ -150,6 +153,18 @@ def test_minhash_incremental_geometry_contract(spark):
     side = minhash_band_signatures(docs, threshold=0.8)
     with pytest.raises(ValueError, match="both num_hashes and bands"):
         minhash_lsh_pairs_incremental(docs, side, bands=6)
+    geometry = dict(num_hashes=24, bands=6)
+    for bad in (1.5, 0.0, -0.2):
+        with pytest.raises(ValueError, match="threshold"):
+            minhash_lsh_pairs(docs, threshold=bad, **geometry)
+        with pytest.raises(ValueError, match="threshold"):
+            minhash_band_signatures(docs, threshold=bad, **geometry)
+        with pytest.raises(ValueError, match="threshold"):
+            minhash_lsh_pairs_incremental(docs, side, threshold=bad, **geometry)
+    # the closed upper end is valid with explicit geometry: only exact
+    # token-set matches remain
+    exact = minhash_lsh_pairs(docs, threshold=1.0, **geometry)
+    assert exact.filter(F.col("jaccard") != 1.0).count() == 0
 
 
 def test_jaccard_hot_token_cap_is_lower_bound(spark):

@@ -102,6 +102,239 @@ def _minhash_signature(tok_hashes: Column, num_hashes: int) -> Column:
     return F.array(*sigs)
 
 
+def _minhash_geometry(
+    threshold: float,
+    num_hashes: int | None,
+    bands: int | None,
+    target_recall: float,
+) -> tuple[int, int]:
+    """The validated ``(num_hashes, bands)`` of every MinHash entry point.
+    ``threshold`` is checked here even when both geometry params are passed
+    and the chooser is skipped: identical-set pairs are emitted without a
+    Jaccard filter, so a threshold above 1 would still emit them at 1.0."""
+    if not 0.0 < threshold <= 1.0:
+        raise ValueError(f"threshold must be in (0, 1]: {threshold}")
+    if (num_hashes is None) != (bands is None):
+        raise ValueError("pass both num_hashes and bands, or neither")
+    if num_hashes is None:
+        num_hashes, bands = choose_minhash_params(threshold, target_recall)
+    if num_hashes % bands != 0:
+        raise ValueError(f"bands must divide num_hashes: {num_hashes=} {bands=}")
+    return num_hashes, bands
+
+
+def _token_hash_sets(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """``(doc_id, th)``: each non-degenerate doc's distinct tokens hashed to
+    longs. Degenerate docs (NULL or empty text → NULL/empty token set) can
+    never verify at jaccard >= t (array_intersect on NULL → NULL jaccard;
+    0/0 → NULL). They must be dropped BEFORE the identical-set collapse —
+    xxhash64(sort_array(NULL)) is the seed constant, not NULL, so all
+    NULL-text docs would collapse into ONE set and the intra-membership
+    join would emit every pair of them at jaccard 1.0."""
+    from ..sources.readers import fan_out
+
+    return (
+        fan_out(docs)
+        .select(
+            F.col(id_col).alias("doc_id"),
+            distinct_tokens(F.col(text_col)).alias("toks"),
+        )
+        .select("doc_id", _token_hashes(F.col("toks")).alias("th"))
+        .filter(F.col("th").isNotNull() & (F.size("th") > 0))
+    )
+
+
+def _band_signatures(sets: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """``sets`` signed: its other columns, then ``n_toks``, ``th`` and the
+    ``bands`` array, where band ``b`` hashes MinHash components
+    ``b*r .. b*r+r-1`` (``r = num_hashes // bands``)."""
+    rows_per_band = num_hashes // bands
+    band_cols = [
+        F.xxhash64(
+            *[F.col("sig").getItem(b * rows_per_band + r) for r in range(rows_per_band)]
+        )
+        for b in range(bands)
+    ]
+    return sets.withColumn("sig", _minhash_signature(F.col("th"), num_hashes)).select(
+        *[c for c in sets.columns if c != "th"],
+        F.size("th").cast("bigint").alias("n_toks"),
+        "th",
+        F.array(*band_cols).alias("bands"),
+    )
+
+
+def _banded(sig: DataFrame, bands: int, *keys: str) -> DataFrame:
+    """One row per (doc, band) of a signature table, exploded in-map:
+    ``keys``, ``n_toks``, ``th``, every band signature as ``b0..`` (for
+    :func:`first_collision_band`) and the row's ``band_id``/``band_sig``."""
+    return sig.select(
+        *keys,
+        "n_toks",
+        "th",
+        *[F.col("bands").getItem(b).alias(f"b{b}") for b in range(bands)],
+        F.posexplode("bands").alias("band_id", "band_sig"),
+    )
+
+
+def _verified_pairs(
+    a: DataFrame, b: DataFrame, threshold: float, bands: int, key: str, *, ordered: bool
+) -> DataFrame:
+    """``(ka, kb, jaccard)``: the ``key`` values of every pair of
+    :func:`_banded` rows that collide FIRST in some band and whose exact
+    hashed-token-set Jaccard is >= ``threshold``. ``ordered`` keeps only
+    ``a.doc_id < b.doc_id`` (a self-join); the corpus probe passes its
+    broadcast side as ``b`` and keeps both orders.
+
+    Size-compatibility pruning is exact: J(A,B) <= min|.|/max|.|, so J >=
+    t forces the smaller token set to hold at least t x the larger one's
+    tokens — two long comparisons per matched row, zero recall loss.
+
+    The join's output projection computes the expensive set intersection
+    directly from the token arrays riding on both banded sides; the
+    monotonically_increasing_id column is a deliberate optimizer barrier:
+    without it, Catalyst pushes the jaccard filter below this projection by
+    SUBSTITUTING the array_intersect expression into the predicate — it
+    lands in the join's post-condition where it is evaluated TWICE per
+    candidate (numerator and denominator, no subexpression elimination in
+    join conditions) plus once more in the surviving row's Project. A
+    nondeterministic projection field blocks PushPredicateThroughNonJoin
+    and CollapseProject, so the intersection runs exactly once per
+    candidate. The filter must keep a live reference to the barrier
+    column, else ColumnPruning deletes it and the projection becomes
+    pushable again (pinned by tests/test_plans.py::
+    test_lsh_verification_single_intersect on both MinHash queries)."""
+    on = (F.col("a.band_id") == F.col("b.band_id")) & (
+        F.col("a.band_sig") == F.col("b.band_sig")
+    )
+    if ordered:
+        on = on & (F.col("a.doc_id") < F.col("b.doc_id"))
+    size_compatible = F.least(F.col("a.n_toks"), F.col("b.n_toks")) >= (
+        F.greatest(F.col("a.n_toks"), F.col("b.n_toks")) * F.lit(threshold)
+    )
+    scored = (
+        a.alias("a")
+        .join(b.alias("b"), on & first_collision_band(bands) & size_compatible)
+        .select(
+            F.col(f"a.{key}").alias("ka"),
+            F.col(f"b.{key}").alias("kb"),
+            F.col("a.n_toks").alias("n_a"),
+            F.col("b.n_toks").alias("n_b"),
+            F.size(F.array_intersect("a.th", "b.th")).cast("bigint").alias("n_inter"),
+            F.monotonically_increasing_id().alias("_pushdown_barrier"),
+        )
+    )
+    return (
+        scored.withColumn(
+            "jaccard",
+            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
+        )
+        .filter(
+            # >= 0 is always true for monotonically_increasing_id but not
+            # foldable (isNotNull would constant-fold away: the id is
+            # non-nullable, and a folded-out reference lets ColumnPruning
+            # delete the barrier and re-enable the pushdown).
+            (F.col("jaccard") >= threshold) & (F.col("_pushdown_barrier") >= 0)
+        )
+        .select("ka", "kb", "jaccard")
+    )
+
+
+def _minhash_self_pairs(
+    sets: DataFrame,
+    threshold: float,
+    bands: int,
+    intra_edges: str,
+    num_hashes: int | None = None,
+) -> DataFrame:
+    """All verified near-dup pairs ``(doc_a, doc_b, jaccard)`` within one
+    doc set: identical-set collapse → banded self-join of the
+    representatives → :func:`_verified_pairs` → membership expansion.
+
+    ``sets`` is either :func:`_token_hash_sets` output, whose
+    representatives are signed here with ``num_hashes`` (so only one doc
+    per distinct set pays for a signature), or a
+    :func:`minhash_band_signatures` table (``num_hashes=None``), whose
+    ``n_toks`` and ``bands`` the representatives carry through. Both give
+    bit-identical pairs: setkey, band hashes, candidate enumeration and the
+    jaccard doubles are all pure functions of ``th``."""
+    # Set identity = hash of the sorted token-hash array (order-insensitive).
+    # Used three times (reps, two expansion probes) — cache it.
+    sets = tracked_cache(
+        sets.withColumn("setkey", F.xxhash64(F.sort_array(F.col("th"))))
+    )
+    members = sets.select("doc_id", "setkey")
+    # every member of a set has identical th (as a set) and hence identical
+    # signature/band arrays; min_by picks the smallest-id member's copies
+    reps = sets.groupBy("setkey").agg(
+        F.min("doc_id").alias("doc_id"),
+        *[
+            F.min_by(c, "doc_id").alias(c)
+            for c in sets.columns
+            if c not in ("doc_id", "setkey")
+        ],
+    )
+    signed = reps
+    if num_hashes is not None:
+        # Both sides of the self-join instantiate this sub-plan; Catalyst
+        # does not share identical subtrees across join branches, so
+        # without caching the signatures would be computed twice and
+        # tokenization four times. (At cluster scale: persist to
+        # MEMORY_AND_DISK or materialize signatures to a table first.)
+        signed = tracked_cache(_band_signatures(reps, num_hashes, bands))
+    banded = _banded(signed, bands, "doc_id", "setkey")
+    rep_pairs = _verified_pairs(
+        banded, banded, threshold, bands, "setkey", ordered=True
+    )
+    # Expand rep-level pairs back to doc-level: every (member of ka,
+    # member of kb) pair inherits the verified jaccard; least/greatest
+    # restores the doc_a < doc_b normalization (set groups are disjoint, so
+    # each unordered pair appears exactly once).
+    cross = (
+        rep_pairs.join(
+            members.withColumnsRenamed({"doc_id": "da", "setkey": "ka"}), "ka"
+        )
+        .join(members.withColumnsRenamed({"doc_id": "db", "setkey": "kb"}), "kb")
+        .select(
+            F.least("da", "db").alias("doc_a"),
+            F.greatest("da", "db").alias("doc_b"),
+            "jaccard",
+        )
+    )
+    # Identical-set pairs: always collide (same signature in every band) and
+    # verify at exactly 1.0 — generated directly from the membership table.
+    if intra_edges == "star":
+        # spanning star per set: rep = the group's min id (already computed
+        # in `reps`), one (rep, member) row per non-rep member — linear in
+        # group size, connectivity-equivalent to the clique; doc_a < doc_b
+        # holds because rep is the minimum
+        intra = (
+            members.join(
+                reps.select("setkey", F.col("doc_id").alias("_rep")), "setkey"
+            )
+            .filter(F.col("doc_id") != F.col("_rep"))
+            .select(
+                F.col("_rep").alias("doc_a"),
+                F.col("doc_id").alias("doc_b"),
+                F.lit(1.0).alias("jaccard"),
+            )
+        )
+    else:
+        intra = (
+            members.alias("x")
+            .join(
+                members.alias("y"),
+                (F.col("x.setkey") == F.col("y.setkey"))
+                & (F.col("x.doc_id") < F.col("y.doc_id")),
+            )
+            .select(
+                F.col("x.doc_id").alias("doc_a"),
+                F.col("y.doc_id").alias("doc_b"),
+                F.lit(1.0).alias("jaccard"),
+            )
+        )
+    return cross.unionByName(intra)
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -187,265 +420,11 @@ def minhash_lsh_pairs(
     a k-doc exact-duplicate group costs k banded rows and k² join matches
     without it, 1 row with it.
     """
-    from ..sources.readers import fan_out
-
-    if (num_hashes is None) != (bands is None):
-        raise ValueError("pass both num_hashes and bands, or neither")
-    if num_hashes is None:
-        num_hashes, bands = choose_minhash_params(threshold, target_recall)
-    if num_hashes % bands != 0:
-        raise ValueError(f"bands must divide num_hashes: {num_hashes=} {bands=}")
+    num_hashes, bands = _minhash_geometry(threshold, num_hashes, bands, target_recall)
     if intra_edges not in ("clique", "star"):
         raise ValueError(f"intra_edges must be 'clique' or 'star': {intra_edges!r}")
-    docs = fan_out(docs)
-    rows_per_band = num_hashes // bands
-    toksets = docs.select(
-        F.col(id_col).alias("doc_id"), distinct_tokens(F.col(text_col)).alias("toks")
-    ).select("doc_id", _token_hashes(F.col("toks")).alias("th"))
-    # Degenerate docs (NULL or empty text → NULL/empty token set) can never
-    # verify at jaccard >= t: pre-collapse they died in verification
-    # (array_intersect on NULL → NULL jaccard → filtered; 0/0 → NULL). They
-    # must be dropped BEFORE the set-identity collapse — xxhash64(sort_array
-    # (NULL)) is the seed constant, not NULL, so all NULL-text docs would
-    # collapse into ONE set and the intra-membership join would emit every
-    # pair of them at jaccard 1.0.
-    toksets = toksets.filter(F.col("th").isNotNull() & (F.size("th") > 0))
-    # Set identity = hash of the sorted token-hash array (order-insensitive).
-    toksets = toksets.withColumn("setkey", F.xxhash64(F.sort_array(F.col("th"))))
-    # Used three times (reps, two expansion probes) — cache the tokenization.
-    toksets = tracked_cache(toksets)
-    members = toksets.select("doc_id", "setkey")
-    reps = toksets.groupBy("setkey").agg(
-        F.min("doc_id").alias("doc_id"), F.min_by("th", "doc_id").alias("th")
-    )
-    base = reps.withColumn("sig", _minhash_signature(F.col("th"), num_hashes))
-    band_cols = [
-        F.xxhash64(
-            *[F.col("sig").getItem(b * rows_per_band + r) for r in range(rows_per_band)]
-        )
-        for b in range(bands)
-    ]
-    base = base.select(
-        "doc_id",
-        "setkey",
-        "th",
-        F.size("th").cast("bigint").alias("n_toks"),
-        *[c.alias(f"b{b}") for b, c in enumerate(band_cols)],
-    )
-    # Both sides of the self-join instantiate this sub-plan; Catalyst does
-    # not share identical subtrees across join branches, so without caching
-    # the signatures would be computed twice and tokenization four times.
-    # (At cluster scale: persist to MEMORY_AND_DISK or materialize
-    # signatures to a table first.)
-    base = tracked_cache(base)
-
-    banded = base.select(
-        "doc_id",
-        "setkey",
-        "th",
-        "n_toks",
-        *[f"b{b}" for b in range(bands)],
-        F.posexplode(F.array(*[F.col(f"b{b}") for b in range(bands)])).alias(
-            "band_id", "band_sig"
-        ),
-    )
-    no_earlier = first_collision_band(bands)
-    # Size-compatibility pruning, exact: J(A,B) <= min|.|/max|.|, so J >=
-    # t forces the smaller token set to hold at least t x the larger one's
-    # tokens. Two long comparisons per matched row, zero recall loss.
-    size_compatible = F.least(F.col("a.n_toks"), F.col("b.n_toks")) >= (
-        F.greatest(F.col("a.n_toks"), F.col("b.n_toks")) * F.lit(threshold)
-    )
-    # The join's output projection computes the expensive set intersection
-    # directly from the token arrays riding on both banded sides; the
-    # monotonically_increasing_id column is a deliberate optimizer barrier:
-    # without it, Catalyst pushes the jaccard filter below this projection by
-    # SUBSTITUTING the array_intersect expression into the predicate — it
-    # lands in the join's post-condition where it is evaluated TWICE per
-    # candidate (numerator and denominator, no subexpression elimination in
-    # join conditions) plus once more in the surviving row's Project. A
-    # nondeterministic projection field blocks PushPredicateThroughNonJoin
-    # and CollapseProject, so the intersection runs exactly once per
-    # candidate. The filter below must keep a live reference to the barrier
-    # column, else ColumnPruning deletes it and the projection becomes
-    # pushable again.
-    scored = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & no_earlier
-            & size_compatible,
-        )
-        .select(
-            F.col("a.setkey").alias("ka"),
-            F.col("b.setkey").alias("kb"),
-            F.col("a.n_toks").alias("n_a"),
-            F.col("b.n_toks").alias("n_b"),
-            F.size(F.array_intersect("a.th", "b.th")).cast("bigint").alias("n_inter"),
-            F.monotonically_increasing_id().alias("_pushdown_barrier"),
-        )
-    )
-    rep_pairs = (
-        scored.withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
-        .filter(
-            # >= 0 is always true for monotonically_increasing_id but not
-            # foldable (isNotNull would constant-fold away: the id is
-            # non-nullable, and a folded-out reference lets ColumnPruning
-            # delete the barrier and re-enable the pushdown).
-            (F.col("jaccard") >= threshold) & (F.col("_pushdown_barrier") >= 0)
-        )
-        .select("ka", "kb", "jaccard")
-    )
-    # Expand rep-level pairs back to doc-level: every (member of ka,
-    # member of kb) pair inherits the verified jaccard; least/greatest
-    # restores the doc_a < doc_b normalization (set groups are disjoint, so
-    # each unordered pair appears exactly once).
-    cross = (
-        rep_pairs.join(
-            members.withColumnsRenamed({"doc_id": "da", "setkey": "ka"}), "ka"
-        )
-        .join(members.withColumnsRenamed({"doc_id": "db", "setkey": "kb"}), "kb")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "jaccard",
-        )
-    )
-    # Identical-set pairs: always collide (same signature in every band) and
-    # verify at exactly 1.0 — generated directly from the membership table.
-    if intra_edges == "star":
-        # spanning star per set: rep = the group's min id (already computed
-        # in `reps`), one (rep, member) row per non-rep member — linear in
-        # group size, connectivity-equivalent to the clique; doc_a < doc_b
-        # holds because rep is the minimum
-        intra = (
-            members.join(
-                reps.select("setkey", F.col("doc_id").alias("_rep")), "setkey"
-            )
-            .filter(F.col("doc_id") != F.col("_rep"))
-            .select(
-                F.col("_rep").alias("doc_a"),
-                F.col("doc_id").alias("doc_b"),
-                F.lit(1.0).alias("jaccard"),
-            )
-        )
-    else:
-        intra = (
-            members.alias("x")
-            .join(
-                members.alias("y"),
-                (F.col("x.setkey") == F.col("y.setkey"))
-                & (F.col("x.doc_id") < F.col("y.doc_id")),
-            )
-            .select(
-                F.col("x.doc_id").alias("doc_a"),
-                F.col("y.doc_id").alias("doc_b"),
-                F.lit(1.0).alias("jaccard"),
-            )
-        )
-    return cross.unionByName(intra)
-
-
-def _minhash_pairs_from_signatures(
-    sig: DataFrame, threshold: float, bands: int
-) -> DataFrame:
-    """Verified near-dup pairs from an ALREADY-COMPUTED per-doc signature
-    table ``(doc_id, n_toks, th, bands)`` (`minhash_band_signatures`
-    output) — the batch enumeration of :func:`minhash_lsh_pairs`
-    (identical-set collapse → banded rep self-join with
-    first-collision-band emission → exact-Jaccard verify → membership
-    expansion) without re-tokenizing or re-signaturing. Bit-identical to
-    ``minhash_lsh_pairs`` over the same docs/geometry: setkey, band
-    hashes, candidate enumeration and the jaccard doubles are all pure
-    functions of ``th``, which both paths share (pinned by the
-    incremental composition-identity test). Exists so
-    `minhash_lsh_pairs_incremental`'s within-batch leg signatures the
-    delta ONCE (ADVICE r11 — it used to tokenize + signature the new
-    batch a second time inside the nested ``minhash_lsh_pairs`` call)."""
-    sigt = sig.withColumn("setkey", F.xxhash64(F.sort_array(F.col("th"))))
-    sigt = tracked_cache(sigt)
-    members = sigt.select("doc_id", "setkey")
-    # every member of a set has identical th (as a set) and hence identical
-    # signature/band arrays; min_by picks the smallest-id member's copies
-    # to mirror the batch operator's representative exactly
-    reps = sigt.groupBy("setkey").agg(
-        F.min("doc_id").alias("doc_id"),
-        F.min_by("th", "doc_id").alias("th"),
-        F.min_by("n_toks", "doc_id").alias("n_toks"),
-        F.min_by("bands", "doc_id").alias("_bands"),
-    )
-    banded = reps.select(
-        "doc_id",
-        "setkey",
-        "th",
-        "n_toks",
-        *[F.col("_bands").getItem(b).alias(f"b{b}") for b in range(bands)],
-        F.posexplode("_bands").alias("band_id", "band_sig"),
-    )
-    no_earlier = first_collision_band(bands)
-    size_compatible = F.least(F.col("a.n_toks"), F.col("b.n_toks")) >= (
-        F.greatest(F.col("a.n_toks"), F.col("b.n_toks")) * F.lit(threshold)
-    )
-    # same optimizer-barrier discipline as minhash_lsh_pairs: intersection
-    # computed once per candidate in the join's output projection
-    scored = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & no_earlier
-            & size_compatible,
-        )
-        .select(
-            F.col("a.setkey").alias("ka"),
-            F.col("b.setkey").alias("kb"),
-            F.col("a.n_toks").alias("n_a"),
-            F.col("b.n_toks").alias("n_b"),
-            F.size(F.array_intersect("a.th", "b.th")).cast("bigint").alias("n_inter"),
-            F.monotonically_increasing_id().alias("_pushdown_barrier"),
-        )
-    )
-    rep_pairs = (
-        scored.withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
-        .filter((F.col("jaccard") >= threshold) & (F.col("_pushdown_barrier") >= 0))
-        .select("ka", "kb", "jaccard")
-    )
-    cross = (
-        rep_pairs.join(
-            members.withColumnsRenamed({"doc_id": "da", "setkey": "ka"}), "ka"
-        )
-        .join(members.withColumnsRenamed({"doc_id": "db", "setkey": "kb"}), "kb")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "jaccard",
-        )
-    )
-    intra = (
-        members.alias("x")
-        .join(
-            members.alias("y"),
-            (F.col("x.setkey") == F.col("y.setkey"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return cross.unionByName(intra)
+    sets = _token_hash_sets(docs, text_col, id_col)
+    return _minhash_self_pairs(sets, threshold, bands, intra_edges, num_hashes)
 
 
 def minhash_band_signatures(
@@ -478,37 +457,8 @@ def minhash_band_signatures(
     candidates, and the exact Jaccard that turns them into verdicts needs
     both token sets — storing them here (longs, one per distinct token)
     is what lets the probe never touch corpus TEXT."""
-    from ..sources.readers import fan_out
-
-    if (num_hashes is None) != (bands is None):
-        raise ValueError("pass both num_hashes and bands, or neither")
-    if num_hashes is None:
-        num_hashes, bands = choose_minhash_params(threshold, target_recall)
-    if num_hashes % bands != 0:
-        raise ValueError(f"bands must divide num_hashes: {num_hashes=} {bands=}")
-    rows_per_band = num_hashes // bands
-    toksets = (
-        fan_out(docs)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            distinct_tokens(F.col(text_col)).alias("toks"),
-        )
-        .select("doc_id", _token_hashes(F.col("toks")).alias("th"))
-        .filter(F.col("th").isNotNull() & (F.size("th") > 0))
-    )
-    sig = toksets.withColumn("sig", _minhash_signature(F.col("th"), num_hashes))
-    band_cols = [
-        F.xxhash64(
-            *[F.col("sig").getItem(b * rows_per_band + r) for r in range(rows_per_band)]
-        )
-        for b in range(bands)
-    ]
-    return sig.select(
-        "doc_id",
-        F.size("th").cast("bigint").alias("n_toks"),
-        "th",
-        F.array(*band_cols).alias("bands"),
-    )
+    num_hashes, bands = _minhash_geometry(threshold, num_hashes, bands, target_recall)
+    return _band_signatures(_token_hash_sets(docs, text_col, id_col), num_hashes, bands)
 
 
 def minhash_lsh_pairs_incremental(
@@ -527,12 +477,11 @@ def minhash_lsh_pairs_incremental(
     the corpus represented ONLY by its :func:`minhash_band_signatures`
     side table, its text never read, never re-signatured — plus, by
     default, the within-batch pairs (bit-identical to
-    :func:`minhash_lsh_pairs` over the new docs alone, but enumerated
-    from the batch's ALREADY-COMPUTED signatures via
-    :func:`_minhash_pairs_from_signatures`, so the delta is tokenized
-    and signatured exactly once — ADVICE r11). This is the
-    daily-crawl maintenance form of
-    near-dup dedup: before r11 a user had to rerun ``minhash_lsh_pairs``
+    :func:`minhash_lsh_pairs` over the new docs alone: both run
+    :func:`_minhash_self_pairs`, here on the batch's ALREADY-COMPUTED
+    signatures, so the delta is tokenized and signatured exactly once —
+    ADVICE r11). This is the daily-crawl maintenance form of near-dup
+    dedup: before r11 a user had to rerun ``minhash_lsh_pairs``
     over old+new every day (re-tokenizing and re-hashing the whole
     corpus); now only the delta is signatured.
 
@@ -564,23 +513,7 @@ def minhash_lsh_pairs_incremental(
     exact family."""
     from ..session import maybe_broadcast
 
-    if (num_hashes is None) != (bands is None):
-        raise ValueError("pass both num_hashes and bands, or neither")
-    if num_hashes is None:
-        num_hashes, bands = choose_minhash_params(threshold, target_recall)
-    if num_hashes % bands != 0:
-        raise ValueError(f"bands must divide num_hashes: {num_hashes=} {bands=}")
-
-    def banded_view(df: DataFrame) -> DataFrame:
-        b_cols = [F.col("bands").getItem(b).alias(f"b{b}") for b in range(bands)]
-        return df.select(
-            "doc_id",
-            "n_toks",
-            "th",
-            *b_cols,
-            F.posexplode("bands").alias("band_id", "band_sig"),
-        )
-
+    num_hashes, bands = _minhash_geometry(threshold, num_hashes, bands, target_recall)
     new_sig = minhash_band_signatures(
         new_docs, text_col, id_col, threshold, num_hashes, bands
     )
@@ -590,50 +523,18 @@ def minhash_lsh_pairs_incremental(
         # enumeration — before this cache the within-batch leg re-tokenized
         # and re-signatured the whole batch inside minhash_lsh_pairs
         new_sig = tracked_cache(new_sig)
-    corpus_banded = banded_view(seen_bands)
-    probe = banded_view(new_sig)
-    no_earlier = first_collision_band(bands)
-    size_compatible = F.least(F.col("a.n_toks"), F.col("b.n_toks")) >= (
-        F.greatest(F.col("a.n_toks"), F.col("b.n_toks")) * F.lit(threshold)
-    )
-    # Same optimizer-barrier discipline as minhash_lsh_pairs: the exact
-    # intersection is computed once per candidate in the join's output
-    # projection, and the nondeterministic column keeps Catalyst from
-    # substituting it into a pushed predicate.
-    scored = (
-        corpus_banded.alias("a")
-        .join(
-            maybe_broadcast(probe.alias("b")),
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & no_earlier
-            & size_compatible,
-        )
-        .select(
-            F.col("a.doc_id").alias("da"),
-            F.col("b.doc_id").alias("db"),
-            F.col("a.n_toks").alias("n_a"),
-            F.col("b.n_toks").alias("n_b"),
-            F.size(F.array_intersect("a.th", "b.th")).cast("bigint").alias("n_inter"),
-            F.monotonically_increasing_id().alias("_pushdown_barrier"),
-        )
-    )
-    cross = (
-        scored.withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
-        .filter((F.col("jaccard") >= threshold) & (F.col("_pushdown_barrier") >= 0))
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "jaccard",
-        )
+    probe = maybe_broadcast(_banded(new_sig, bands, "doc_id"))
+    corpus = _banded(seen_bands, bands, "doc_id")
+    cross = _verified_pairs(
+        corpus, probe, threshold, bands, "doc_id", ordered=False
+    ).select(
+        F.least("ka", "kb").alias("doc_a"),
+        F.greatest("ka", "kb").alias("doc_b"),
+        "jaccard",
     )
     if not include_within_batch:
         return cross
-    within = _minhash_pairs_from_signatures(new_sig, threshold, bands)
-    return cross.unionByName(within)
+    return cross.unionByName(_minhash_self_pairs(new_sig, threshold, bands, "clique"))
 
 
 # Row budget for the connected-components driver fast path: one scan-task's
