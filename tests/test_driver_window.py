@@ -21,7 +21,14 @@ import glob
 import json
 import os
 
-from the_movie_database_import_spark.plans import DRIVER_WINDOW, REGISTRY
+import pytest
+
+from the_movie_database_import_spark.plans import (
+    DRIVER_WINDOW,
+    REGISTRY,
+    TAIL_PRIORITY,
+    _ordered_names,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -62,6 +69,17 @@ def test_registry_order_starts_with_window():
         "registry iteration order no longer starts with DRIVER_WINDOW — "
         "a refactor reordered registration"
     )
+
+
+def test_unregistered_list_names_raise():
+    """A stale name in either curated list fails the import-time reorder
+    instead of silently vanishing from the order (TAIL_PRIORITY used to drop
+    them); the current lists place every name exactly as registered."""
+    assert _ordered_names(DRIVER_WINDOW, TAIL_PRIORITY) == list(REGISTRY)
+    with pytest.raises(RuntimeError, match="DRIVER_WINDOW.*q_not_registered"):
+        _ordered_names([*DRIVER_WINDOW, "q_not_registered"], TAIL_PRIORITY)
+    with pytest.raises(RuntimeError, match="TAIL_PRIORITY.*q_not_registered"):
+        _ordered_names(DRIVER_WINDOW, [*TAIL_PRIORITY, "q_not_registered"])
 
 
 def test_never_checked_set_shrinks_monotonically():

@@ -146,9 +146,10 @@ def fuzzy_pairs_edit1(
         # past the threshold, instead of filling the full O(len_a ×
         # len_b) matrix and discarding the answer. Verification is the
         # dominant CPU at scale (r12 probe: 64.5% of operator CPU at
-        # sf1 — tools/fuzzy_split_probe.py), so bounding the DP attacks
-        # the top term directly. Emitted rows are IDENTICAL: survivors
-        # have dist in {0, 1}, where both variants agree exactly.
+        # sf1 — the fuzzy-pairs CPU split row of BASELINE.md), so
+        # bounding the DP attacks the top term directly. Emitted rows
+        # are IDENTICAL: survivors have dist in {0, 1}, where both
+        # variants agree exactly.
         .withColumn(
             "dist", F.levenshtein("name_a", "name_b", 1).cast("long")
         )

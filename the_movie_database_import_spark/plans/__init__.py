@@ -309,15 +309,22 @@ def _wrap_release(spec: QuerySpec) -> QuerySpec:
     return dataclasses.replace(spec, spark_fn=fn)
 
 
+def _ordered_names(window: list[str], tail: list[str]) -> list[str]:
+    """Registry order: ``window``, then ``tail``, then every other name in
+    registration order. A name in either list that is not registered is a
+    stale list entry and raises."""
+    for label, names in (("DRIVER_WINDOW", window), ("TAIL_PRIORITY", tail)):
+        missing = [n for n in names if n not in REGISTRY]
+        if missing:
+            raise RuntimeError(f"{label} names not registered: {missing}")
+    placed = set(window) | set(tail)
+    return [*window, *tail, *(n for n in REGISTRY if n not in placed)]
+
+
 def _reorder() -> None:
-    missing = [n for n in DRIVER_WINDOW if n not in REGISTRY]
-    if missing:
-        raise RuntimeError(f"DRIVER_WINDOW names not registered: {missing}")
-    placed = set(DRIVER_WINDOW) | set(TAIL_PRIORITY)
-    rest = [n for n in REGISTRY if n not in placed]
     ordered = {
         n: _wrap_release(REGISTRY[n])
-        for n in [*DRIVER_WINDOW, *[t for t in TAIL_PRIORITY if t in REGISTRY], *rest]
+        for n in _ordered_names(DRIVER_WINDOW, TAIL_PRIORITY)
     }
     REGISTRY.clear()
     REGISTRY.update(ordered)

@@ -9,6 +9,7 @@ plans are deterministic and column pruning / predicate pushdown reach the scan).
 from __future__ import annotations
 
 import os
+import stat
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -30,8 +31,68 @@ TESTDATA_TABLES = (
 )
 
 
+# Session confs that change how parquet physical types map to Spark types:
+# part of the schema-cache key, so toggling one re-infers.
+_PARQUET_TYPE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_GLOB_CHARS = frozenset("*?[]{}\\")
+# abspath -> (file version, inferred schema); one entry per path, so a
+# rewritten file replaces its stale schema. Process-wide on purpose: the
+# version determines the schema, so every session and caller may share it.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _file_version(spark: SparkSession, path: str) -> tuple[str, tuple] | None:
+    """``(abspath, version)`` of a local regular file, or None for every
+    path :func:`load_table` says is not cached."""
+    parsed = urlparse(path)
+    if parsed.scheme not in ("", "file") or _GLOB_CHARS & set(path):
+        return None
+    local = os.path.abspath(parsed.path if parsed.scheme else path)
+    try:
+        st = os.stat(local)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    confs = tuple(spark.conf.get(k) for k in _PARQUET_TYPE_CONFS)
+    return local, (st.st_ino, st.st_size, st.st_mtime_ns, confs)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a local file's schema once
+    per file version (see :func:`load_table`); every other path reads
+    exactly as ``spark.read.parquet`` does."""
+    version = _file_version(spark, path)
+    if version is None:
+        return spark.read.parquet(path)
+    local, key = version
+    cached = _SCHEMAS.get(local)
+    if cached is not None and cached[0] == key:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    # A rewrite racing the inference must not pin its schema to the old key.
+    if _file_version(spark, path) == version:
+        _SCHEMAS[local] = (key, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata parquet table.
+
+    The schema is inferred once per file version: inference is one Spark
+    job per read, and the cached ``StructType`` passed back through
+    ``spark.read.schema`` skips it, so rebuilding a query starts no job.
+    The cache key is the absolute path, the file's ``(st_ino, st_size,
+    st_mtime_ns)`` and the session confs that change the parquet → Spark
+    type mapping (``nanosAsLong``, ``binaryAsString``, ``int96AsTimestamp``,
+    ``inferTimestampNTZ.enabled``), so a regenerated file or a toggled conf
+    re-infers. Directories, globs, remote URIs and unstatable paths are not
+    cached and infer on every read.
 
     ``events.ts`` is stored as parquet TIMESTAMP(NANOS), which Spark's
     vectorized reader cannot decode natively; with
@@ -41,7 +102,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     matching DuckDB's naive-timestamp reading of the same file).
     """
     configure_session(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # `div` is exact integer division; `/` would be double division and
         # epoch nanos (~1.7e18) exceed double's 2^53 exact range, so an

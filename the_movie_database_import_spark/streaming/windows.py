@@ -25,6 +25,7 @@ from pyspark.sql.types import (
 )
 
 from ..session import configure_session
+from ..sources.readers import read_parquet
 
 
 def _events_raw_schema(ts_is_long: bool) -> StructType:
@@ -52,13 +53,13 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A production deployment swaps this for a Kafka/Kinesis source; every
     transform downstream is source-agnostic. The on-disk timestamp encoding
-    is probed from the parquet footer (one cheap batch-reader call) so both
-    the TIMESTAMP(NANOS) and TIMESTAMP(MICROS) encodings stream correctly —
-    same adaptivity as the batch ``load_table``.
+    is probed from the parquet footer (the batch reader's per-file-version
+    cached schema) so both the TIMESTAMP(NANOS) and TIMESTAMP(MICROS)
+    encodings stream correctly — same adaptivity as the batch ``load_table``.
     """
     configure_session(spark)
     ts_is_long = (
-        dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes).get("ts")
+        dict(read_parquet(spark, f"{sf_dir}/events.parquet").dtypes).get("ts")
         == "bigint"
     )
     # The file source requires a directory; pathGlobFilter narrows the
