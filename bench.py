@@ -1,24 +1,34 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs headline queries at $SPARK_GRAFT_SF_DIR (default
+"""Per-query harness: runs a set of queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": N, "unit": "sec", "queries": {name: sec}, "sf": ...}.
 
+    python bench.py [--set headline|tag:<t>|<q_a,q_b,...>]
+
+``--set`` picks the queries: the 16 frozen headline queries (the default),
+every query carrying registry tag ``<t>`` (``tag:ext`` is the extension
+series), or a comma-separated list of names. An unknown tag or name exits
+non-zero before any session starts.
+
 Per-query wall time covers plan build + full execution into Spark's `noop`
 sink (every operator runs, nothing is fetched to the Python driver — driver-
-side Row deserialization is harness overhead, not engine work; a pipeline
-would write results to storage, and multi-million-row outputs would swamp
-the timing with py4j transfer otherwise). Session startup is excluded (a
-cluster pays it once, not per query).
+side Row deserialization is harness overhead, not engine work). Session
+startup is excluded (a cluster pays it once, not per query).
 
 Each query is timed over $SPARK_GRAFT_BENCH_PASSES (default 3) passes after
 one untimed warmup, reporting the per-query MEDIAN: single-pass numbers on a
-shared machine swing ±25% (one GC or page-cache event made a 0.8s query read
-as 11.8s in a previous single-pass run), and the median of 3 is immune to
-one outlier pass.
+shared machine swing ±25%, and the median of 3 is immune to one outlier pass.
+
+Each timed query is one perfbench :class:`Tracer` span holding a
+``plans.build`` and a ``plans.exec`` child, with the query's
+:class:`StatusStore` counts attached. The medians of that record go to
+stderr, one row per query: build and exec seconds, build-time jobs, jobs,
+stages, tasks, executor CPU seconds and shuffle bytes.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
@@ -27,9 +37,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from the_movie_database_import_spark import metrics  # noqa: E402
+from perfbench.spans import StatusStore, Tracer  # noqa: E402
 from the_movie_database_import_spark.plans import REGISTRY  # noqa: E402
 from the_movie_database_import_spark.session import get_spark  # noqa: E402
+
+# Largest after/before ratio of the calibration loop a clean run shows: the
+# loop runs while Spark is idle, so a larger slowdown is load (or frequency
+# scaling) that arrived mid-run.
+CALIB_DRIFT = 1.25
 
 
 def _cpu_calib_ms() -> float:
@@ -48,35 +63,196 @@ def _cpu_calib_ms() -> float:
     return round((time.perf_counter() - t0) * 1000, 1)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def _load_gate() -> float:
+    return float(os.environ.get("SPARK_GRAFT_LOAD_GATE", "2.0"))
+
+
+def load_warning(
+    load_1m_before: float, calib_ms_before: float, calib_ms_after: float, gate: float
+) -> bool:
+    """Whether a run was recorded on a contended host: the 1-minute load
+    was above ``gate`` when it started, or the calibration loop slowed by
+    more than :data:`CALIB_DRIFT` across it. The load AFTER the run is no
+    evidence — our own Spark threads raise it (idle starts read 0.05 → 3.77
+    and 0.10 → 5.02 over a clean run)."""
+    return load_1m_before > gate or calib_ms_after / calib_ms_before > CALIB_DRIFT
+
+
+def select_queries(spec: str) -> list[str]:
+    """Names for ``--set``: ``headline``, ``tag:<t>`` (sorted by name), or
+    comma-separated names in the order given. Raises ValueError on an
+    unknown tag or name, so an empty set is never timed."""
+    if spec == "headline":
+        return [n for n, s in sorted(REGISTRY.items()) if s.headline]
+    if spec.startswith("tag:"):
+        tag = spec[len("tag:"):]
+        names = [n for n, s in sorted(REGISTRY.items()) if tag in s.tags]
+        if not names:
+            raise ValueError(f"no registry query carries tag {tag!r}")
+        return names
+    names = list(dict.fromkeys(n.strip() for n in spec.split(",") if n.strip()))
+    unknown = [n for n in names if n not in REGISTRY]
+    if unknown or not names:
+        raise ValueError(f"unknown query names {unknown or [spec]}")
+    return names
+
+
+def drain(spark) -> None:
+    """Wait until the status store has seen every posted listener event."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def drained_read(spark, store: StatusStore) -> dict[str, float]:
+    """``store.read()`` after a :func:`drain`: a read marks each new stage
+    as seen even while its end event is still queued, and would lose that
+    stage's tasks and CPU for good."""
+    drain(spark)
+    return store.read()
+
+
+def host_reading() -> tuple[tuple[float, float, float], float]:
+    """1/5/15-min loadavg and the calibration loop, taken while Spark is idle."""
+    return os.getloadavg(), _cpu_calib_ms()
+
+
+def _print_record(med: dict[str, dict[str, float]]) -> None:
+    print(
+        f"{'query':<36} {'build_s':>8} {'exec_s':>8} {'bjobs':>5} {'jobs':>5} "
+        f"{'stages':>6} {'tasks':>6} {'cpu_s':>7} {'shufR_MB':>9} {'shufW_MB':>9}",
+        file=sys.stderr,
+    )
+    for name, m in med.items():
+        print(
+            f"{name:<36} {m['build_s']:>8.3f} {m['exec_s']:>8.3f} "
+            f"{m['build_jobs']:>5.0f} {m['spark.jobs']:>5.0f} {m['spark.stages']:>6.0f} "
+            f"{m['spark.tasks']:>6.0f} {m['spark.executor_cpu_s']:>7.2f} "
+            f"{m['spark.shuffle_read_bytes'] / 1e6:>9.2f} "
+            f"{m['spark.shuffle_write_bytes'] / 1e6:>9.2f}",
+            file=sys.stderr,
+        )
+
+
+def bench(
+    spark,
+    names: list[str],
+    sf_dir: str,
+    passes: int,
+    before: tuple[tuple[float, float, float], float] | None = None,
+    metric: str = "headline_queries_total",
+) -> dict:
+    """Time ``names`` and return the dict bench.py prints. ``before`` is a
+    :func:`host_reading` from before the session started, else taken now."""
+    load_before, calib_before = before or host_reading()
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     try:
         sf_val: float | str = float(sf)
     except ValueError:
         sf_val = sf
 
-    # Host load bracketing (VERDICT r05 #2 nit): a loaded host inflates the
-    # totals ~15-20% UNIFORMLY, so the artifact must carry enough context to
-    # tell noise from regression without an out-of-band rerun. The r05 idle
-    # reference is 12.9 s at sf0.1 (documented band ~14-17 s); treat numbers
-    # recorded at load_1m >~ 3 with that inflation in mind.
-    #
-    # Load GATE (r13, VERDICT r12 #6 — the r12 headline artifact was
-    # recorded on a non-idle host and read 16.52 s against a 13.86 s idle
-    # rerun of the identical tree): when 1-minute load exceeds
-    # $SPARK_GRAFT_LOAD_GATE (default 2.0) the run first WAITS up to
-    # $SPARK_GRAFT_LOAD_WAIT_SEC (default 0, i.e. no wait) for the host to
-    # drain, then — if still loaded — proceeds but stamps the artifact with
-    # "load_warning": true so a recording pass is loudly marked as
-    # contention-inflated instead of masquerading as a regression.
-    # r14 (VERDICT r13 #2): the wait default is now 120 s — both the r12 and
-    # r13 driver recordings were load-stamped because the gate only ever
-    # DOCUMENTED contention (default wait 0). Waiting up to two minutes for
-    # the host to drain costs nothing when idle and converts a contaminated
-    # recording into a clean one; set SPARK_GRAFT_LOAD_WAIT_SEC=0 to restore
-    # the old behavior.
-    load_gate = float(os.environ.get("SPARK_GRAFT_LOAD_GATE", "2.0"))
+    def build(name: str):
+        return REGISTRY[name].spark_fn(spark, sf_dir)
+
+    # Untimed warmup pass: JVM/codegen/parquet-footer caches are one-time
+    # session costs a long-lived cluster amortizes away; the timed passes
+    # measure steady-state plan build + execution.
+    for name in names:
+        build(name).write.format("noop").mode("overwrite").save()
+
+    store = StatusStore(spark)
+    drained_read(spark, store)
+    tracer = Tracer(True)
+    records: dict[str, list[dict]] = {n: [] for n in names}
+    for _ in range(passes):
+        for name in names:
+            # Drains and status-store reads fall outside the build and exec
+            # spans, the two timed windows.
+            job0 = store.max_job()
+            with tracer.span("query", query=name) as q:
+                with tracer.span("plans.build", query=name) as b:
+                    df = build(name)
+                drain(spark)
+                q.attrs["build_jobs"] = store.max_job() - job0
+                with tracer.span("plans.exec", query=name) as e:
+                    df.write.format("noop").mode("overwrite").save()
+            build_s, exec_s = b.end - b.start, e.end - e.start
+            q.attrs.update(build_s=build_s, exec_s=exec_s, wall_s=build_s + exec_s)
+            q.attrs.update(drained_read(spark, store))
+            records[name].append(q.attrs)
+    med = {
+        n: {k: statistics.median(r[k] for r in rs) for k in rs[0] if k != "query"}
+        for n, rs in records.items()
+    }
+    _print_record(med)
+
+    def per_query(key: str, cast=lambda v: round(v, 4)) -> dict:
+        return {n: cast(m[key]) for n, m in med.items()}
+
+    timings = per_query("wall_s")
+    # Executor CPU seconds are load-invariant to first order (contention
+    # stretches wall time, not the cycles our tasks burn); task counts pin
+    # plan shape even when timings hide in noise.
+    cpu_timings = per_query("spark.executor_cpu_s")
+    load_after = os.getloadavg()
+    calib_after = _cpu_calib_ms()
+    warn = load_warning(load_before[0], calib_before, calib_after, _load_gate())
+    if warn:
+        print(
+            f"WARNING: contended recording (load_1m before {load_before[0]:.2f}, "
+            f"calib {calib_before} → {calib_after} ms) — wall times read high; "
+            "the artifact is stamped load_warning",
+            file=sys.stderr,
+        )
+    return {
+        "metric": metric,
+        "value": round(sum(timings.values()), 4),
+        "unit": "sec",
+        "queries": timings,
+        "cpu_sec_total": round(sum(cpu_timings.values()), 4),
+        "queries_cpu_sec": cpu_timings,
+        "queries_tasks": per_query("spark.tasks", int),
+        "queries_jobs": per_query("spark.jobs", int),
+        "queries_build_jobs": per_query("build_jobs", int),
+        "sf": sf_val,
+        # core count the session actually ran with
+        "cpus": int(
+            os.environ.get("SPARK_GRAFT_CPUS") or spark.sparkContext.defaultParallelism
+        ),
+        # 1/5/15-min load before session start and after the timed passes
+        "loadavg_before": [round(x, 2) for x in load_before],
+        "loadavg_after": [round(x, 2) for x in load_after],
+        "load_note": (
+            "host load >~3 inflates totals ~15-20% uniformly; "
+            "idle-host reference band in BASELINE.md"
+        ),
+        # a stamped run compares cpu_sec/tasks, not wall, with a baseline
+        "load_warning": warn,
+        # single-core speed anchor: normalize cross-window seconds by it
+        "cpu_calib_ms_before": calib_before,
+        "cpu_calib_ms_after": calib_after,
+    }
+
+
+def main(argv: list[str] | None = None) -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument(
+        "--set",
+        default="headline",
+        help="headline (default), tag:<t>, or comma-separated query names",
+    )
+    args = ap.parse_args(argv)
+    try:
+        names = select_queries(args.set)
+    except ValueError as e:
+        ap.error(str(e))
+    kind, _, tag = args.set.partition(":")
+    metric = {"headline": "headline", "tag": tag}.get(kind, "selected") + "_queries_total"
+    passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
+
+    # While the 1-minute load exceeds $SPARK_GRAFT_LOAD_GATE (default 2.0)
+    # the run waits up to $SPARK_GRAFT_LOAD_WAIT_SEC (default 120) for the
+    # host to drain; see load_warning for the stamp.
+    load_gate = _load_gate()
     wait_budget = float(os.environ.get("SPARK_GRAFT_LOAD_WAIT_SEC", "120"))
     waited = 0.0
     while os.getloadavg()[0] > load_gate and waited < wait_budget:
@@ -87,101 +263,15 @@ def main() -> None:
         )
         time.sleep(15)
         waited += 15
-    load_before = os.getloadavg()
-    load_warning = load_before[0] > load_gate
-    if load_warning:
-        print(
-            f"WARNING: recording under load_1m {load_before[0]:.2f} > "
-            f"{load_gate} — wall times will read ~15-20% high; the artifact "
-            "is stamped load_warning",
-            file=sys.stderr,
-        )
 
-    calib_before = _cpu_calib_ms()
+    before = host_reading()
     spark = get_spark("tmdb-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    def run(name: str) -> None:
-        df = REGISTRY[name].spark_fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-
-    passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
-    names = [n for n, s in sorted(REGISTRY.items()) if s.headline]
-    # Untimed warmup pass: JVM/codegen/parquet-footer caches are one-time
-    # session costs a long-lived cluster amortizes away; the timed passes
-    # measure steady-state plan build + execution.
-    for name in names:
-        run(name)
-
-    samples: dict[str, list[float]] = {n: [] for n in names}
-    cpu_samples: dict[str, list[float]] = {n: [] for n in names}
-    task_samples: dict[str, list[int]] = {n: [] for n in names}
-    for _ in range(passes):
-        for name in names:
-            snap0 = metrics.stage_totals(spark.sparkContext)
-            t0 = time.perf_counter()
-            run(name)
-            samples[name].append(time.perf_counter() - t0)
-            d = metrics.delta(snap0, metrics.stage_totals(spark.sparkContext))
-            cpu_samples[name].append(d.cpu_ns / 1e9)
-            task_samples[name].append(d.tasks)
-
-    timings = {name: round(statistics.median(ts), 4) for name, ts in samples.items()}
-    # Executor CPU seconds (VERDICT r06 #4): load-INVARIANT to first order —
-    # background load stretches wall time, not the cycles our tasks burn —
-    # so this is the artifact's machine-checkable regression gate
-    # (BASELINE.md states the CPU band). Task counts pin plan shape: a
-    # partitioning/shuffle regression changes them even when timings hide
-    # in noise.
-    cpu_timings = {
-        name: round(statistics.median(cs), 4) for name, cs in cpu_samples.items()
-    }
-    tasks = {name: int(statistics.median(ts)) for name, ts in task_samples.items()}
-
-    total = round(sum(timings.values()), 4)
-    load_after = os.getloadavg()
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "cpu_sec_total": round(sum(cpu_timings.values()), 4),
-                "queries_cpu_sec": cpu_timings,
-                "queries_tasks": tasks,
-                "sf": sf_val,
-                # core count the session actually ran with (r14, VERDICT r13
-                # #4): makes the 8-core scaling rerun self-identifying — at
-                # sf0.1 flat WALL ratios across core counts are the ~40-100
-                # ms/job floor plus 3-task single-row-group scans, and the
-                # honored $SPARK_GRAFT_CPUS shows up in task/CPU deltas.
-                "cpus": int(
-                    os.environ.get("SPARK_GRAFT_CPUS")
-                    or spark.sparkContext.defaultParallelism
-                ),
-                # 1/5/15-min load BEFORE session start and AFTER the timed
-                # passes: pre-existing background load (not our own Spark
-                # threads) shows up in load_before and the 15-min column.
-                "loadavg_before": [round(x, 2) for x in load_before],
-                "loadavg_after": [round(x, 2) for x in load_after],
-                "load_note": (
-                    "host load >~3 inflates totals ~15-20% uniformly; "
-                    "idle-host reference band in BASELINE.md"
-                ),
-                # explicit contention stamp (r13): True means the 1-min load
-                # exceeded the gate when the timed passes started — compare
-                # cpu_sec/tasks, not wall, against the baseline for this run
-                "load_warning": load_warning,
-                # effective single-core speed anchor (r13): a fixed python
-                # integer loop timed before session start and after the
-                # passes — normalize cross-round comparisons by its ratio
-                "cpu_calib_ms_before": calib_before,
-                "cpu_calib_ms_after": _cpu_calib_ms(),
-            }
-        )
-    )
-    spark.stop()
+    try:
+        result = bench(spark, names, sf_dir, passes, before, metric)
+    finally:
+        spark.stop()
+    print(json.dumps(result))
 
 
 if __name__ == "__main__":

@@ -96,7 +96,8 @@ def build_synth(spark) -> None:
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from the_movie_database_import_spark import metrics
+    from bench import drained_read
+    from perfbench.spans import StatusStore
     from the_movie_database_import_spark.operators.dedup import (
         dedup_paragraphs,
         dedup_substring_spans,
@@ -114,6 +115,7 @@ def main() -> None:
     spark = get_spark("tmdb-spark-bench-scaling")
     spark.sparkContext.setLogLevel("ERROR")
     build_synth(spark)
+    store = StatusStore(spark)
 
     def docs_at(d):
         return spark.read.parquet(f"{d}/documents.parquet")
@@ -153,14 +155,11 @@ def main() -> None:
             run()  # warmup
             walls, cpus = [], []
             for _ in range(PASSES):
-                s0 = metrics.stage_totals(spark.sparkContext)
+                drained_read(spark, store)
                 t0 = time.perf_counter()
                 run()
                 walls.append(time.perf_counter() - t0)
-                cpus.append(
-                    metrics.delta(s0, metrics.stage_totals(spark.sparkContext)).cpu_ns
-                    / 1e9
-                )
+                cpus.append(drained_read(spark, store)["spark.executor_cpu_s"])
             sec = statistics.median(walls)
             out[op][scale] = {
                 "rows": n,

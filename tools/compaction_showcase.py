@@ -37,7 +37,8 @@ N_FRAGMENTS = 512
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from the_movie_database_import_spark import metrics
+    from bench import drained_read
+    from perfbench.spans import StatusStore
     from the_movie_database_import_spark.session import get_spark
     from the_movie_database_import_spark.sources.writers import (
         compact_small_files,
@@ -48,6 +49,7 @@ def main() -> None:
     )
     spark = get_spark("compaction-showcase")
     spark.sparkContext.setLogLevel("ERROR")
+    store = StatusStore(spark)
 
     tmp = tempfile.mkdtemp(prefix="compaction_showcase_")
     path = f"{tmp}/lineitem"
@@ -76,13 +78,11 @@ def main() -> None:
             query().write.format("noop").mode("overwrite").save()  # warmup
             walls, tasks = [], []
             for _ in range(3):
-                s0 = metrics.stage_totals(spark.sparkContext)
+                drained_read(spark, store)
                 t0 = time.perf_counter()
                 query().write.format("noop").mode("overwrite").save()
                 walls.append(time.perf_counter() - t0)
-                tasks.append(
-                    metrics.delta(s0, metrics.stage_totals(spark.sparkContext)).tasks
-                )
+                tasks.append(drained_read(spark, store)["spark.tasks"])
             return statistics.median(walls), int(statistics.median(tasks))
 
         before_rows = sorted(map(tuple, query().collect()))

@@ -10,10 +10,11 @@ leak into the next gate):
 1. pytest tests/ -q                      (full local gate, sf0.001)
 2. exact_parity at sf0.01 AND sf0.1      (driver-exact oracle sweeps)
 3. exact_parity VANILLA mode at sf0.01   (driver-environment simulation)
-4. bench.py                              (frozen 16-query headline)
-5. bench_extensions.py                   (the extension series)
+4. pytest perfbench/test_smoke.py        (the declared benchmark still runs)
+5. bench.py                              (frozen 16-query headline)
+6. bench.py --set tag:ext                (the extension series)
 
---fast skips 4-5 (the timing gates) for a correctness-only pass.
+--fast skips 5-6 (the timing gates) for a correctness-only pass.
 Prints one JSON summary line and exits non-zero if any gate fails.
 """
 
@@ -58,11 +59,12 @@ def main() -> int:
             [py, "tools/exact_parity.py", "/root/testdata/sf0.01"],
             {"SPARK_GRAFT_VANILLA": "1"},
         ),
+        ("perfbench_smoke", [py, "-m", "pytest", "perfbench/test_smoke.py", "-q"], None),
     ]
     if not fast:
         gates += [
             ("bench_headline", [py, "bench.py"], None),
-            ("bench_extensions", [py, "tools/bench_extensions.py"], None),
+            ("bench_extensions", [py, "bench.py", "--set", "tag:ext"], None),
         ]
     results = [run(*g) for g in gates]
     ok = all(r["ok"] for r in results)
