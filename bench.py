@@ -23,7 +23,9 @@ Each timed query is one perfbench :class:`Tracer` span holding a
 ``plans.build`` and a ``plans.exec`` child, with the query's
 :class:`StatusStore` counts attached. The medians of that record go to
 stderr, one row per query: build and exec seconds, build-time jobs, jobs,
-stages, tasks, executor CPU seconds and shuffle bytes.
+stages, tasks, executor CPU seconds, shuffle bytes and the whole-stage-
+codegen classes compiled over build + exec (0 once Spark's codegen cache
+holds the query's generated code).
 """
 
 from __future__ import annotations
@@ -110,6 +112,14 @@ def drained_read(spark, store: StatusStore) -> dict[str, float]:
     return store.read()
 
 
+def compile_count(spark) -> int:
+    """Classes Janino has compiled in this JVM so far (Spark's codegen
+    cache misses): a difference of two readings is the recompilation a
+    piece of work paid."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def host_reading() -> tuple[tuple[float, float, float], float]:
     """1/5/15-min loadavg and the calibration loop, taken while Spark is idle."""
     return os.getloadavg(), _cpu_calib_ms()
@@ -118,7 +128,8 @@ def host_reading() -> tuple[tuple[float, float, float], float]:
 def _print_record(med: dict[str, dict[str, float]]) -> None:
     print(
         f"{'query':<36} {'build_s':>8} {'exec_s':>8} {'bjobs':>5} {'jobs':>5} "
-        f"{'stages':>6} {'tasks':>6} {'cpu_s':>7} {'shufR_MB':>9} {'shufW_MB':>9}",
+        f"{'stages':>6} {'tasks':>6} {'cpu_s':>7} {'shufR_MB':>9} {'shufW_MB':>9} "
+        f"{'compiles':>8}",
         file=sys.stderr,
     )
     for name, m in med.items():
@@ -127,7 +138,7 @@ def _print_record(med: dict[str, dict[str, float]]) -> None:
             f"{m['build_jobs']:>5.0f} {m['spark.jobs']:>5.0f} {m['spark.stages']:>6.0f} "
             f"{m['spark.tasks']:>6.0f} {m['spark.executor_cpu_s']:>7.2f} "
             f"{m['spark.shuffle_read_bytes'] / 1e6:>9.2f} "
-            f"{m['spark.shuffle_write_bytes'] / 1e6:>9.2f}",
+            f"{m['spark.shuffle_write_bytes'] / 1e6:>9.2f} {m['compiles']:>8.0f}",
             file=sys.stderr,
         )
 
@@ -166,7 +177,7 @@ def bench(
         for name in names:
             # Drains and status-store reads fall outside the build and exec
             # spans, the two timed windows.
-            job0 = store.max_job()
+            job0, compiles0 = store.max_job(), compile_count(spark)
             with tracer.span("query", query=name) as q:
                 with tracer.span("plans.build", query=name) as b:
                     df = build(name)
@@ -175,7 +186,12 @@ def bench(
                 with tracer.span("plans.exec", query=name) as e:
                     df.write.format("noop").mode("overwrite").save()
             build_s, exec_s = b.end - b.start, e.end - e.start
-            q.attrs.update(build_s=build_s, exec_s=exec_s, wall_s=build_s + exec_s)
+            q.attrs.update(
+                build_s=build_s,
+                exec_s=exec_s,
+                wall_s=build_s + exec_s,
+                compiles=compile_count(spark) - compiles0,
+            )
             q.attrs.update(drained_read(spark, store))
             records[name].append(q.attrs)
     med = {
@@ -212,6 +228,7 @@ def bench(
         "queries_tasks": per_query("spark.tasks", int),
         "queries_jobs": per_query("spark.jobs", int),
         "queries_build_jobs": per_query("build_jobs", int),
+        "queries_compiles": per_query("compiles", int),
         "sf": sf_val,
         # core count the session actually ran with
         "cpus": int(

@@ -66,6 +66,7 @@ def test_bench_stdout_keys(spark):
         "queries_tasks",
         "queries_jobs",
         "queries_build_jobs",
+        "queries_compiles",
         "sf",
         "cpus",
         "loadavg_before",
@@ -79,4 +80,6 @@ def test_bench_stdout_keys(spark):
     assert r["queries_tasks"]["q_pricing_summary"] >= 1
     assert r["queries_jobs"]["q_pricing_summary"] >= 1
     assert r["queries_build_jobs"]["q_pricing_summary"] == 0
+    # the untimed warm-up pass compiled its generated code
+    assert r["queries_compiles"]["q_pricing_summary"] == 0
     assert isinstance(r["load_warning"], bool)

@@ -548,6 +548,24 @@ def test_headline_rebuild_starts_no_job(spark, name):
     assert _job_ids(spark) == before
 
 
+def test_headline_second_pass_compiles_nothing(spark):
+    """Spark's codegen cache holds a whole headline pass: the second pass of
+    the 16 headline queries into the noop sink compiles no class. Under
+    Spark's default of 100 entries each pass compiled ~200 again."""
+    from bench import compile_count, select_queries
+
+    def one_pass() -> None:
+        for name in select_queries("headline"):
+            REGISTRY[name].spark_fn(spark, SF_DIR).write.format("noop").mode(
+                "overwrite"
+            ).save()
+
+    one_pass()
+    before = compile_count(spark)
+    one_pass()
+    assert compile_count(spark) == before
+
+
 def test_load_table_reinfers_rewritten_file(spark, tmp_path):
     """A file rewritten in place is a new version: the cached schema of the
     MICROS encoding must not be applied to the NANOS rewrite. The second

@@ -1,12 +1,21 @@
-"""Python-repr nested-cell parsing (SURVEY.md §7.4, the one place a Python
-UDF is required for reference parity).
+"""Python-repr nested-cell parsing (SURVEY.md §7.4, the one place the ETL
+keeps a Python UDF for reference parity).
 
 TMDB CSV cells hold ``repr()`` of Python objects — single quotes, ``None``,
-apostrophes inside names — which ``from_json`` cannot parse. The reference
-``eval()``s them row-by-row (`loader.py:146,:154,:175,:197,:207,:258,:270,
-:302`); here an Arrow-batched pandas UDF wraps ``ast.literal_eval`` (never
-``eval`` — deviation D3) with the same is-valid-string guard semantics
-(`loader.py:31-34`): non-string/empty cells parse to NULL.
+``True``/``False``, apostrophes inside names. ``from_json`` with
+``allowSingleQuotes`` (plus ``allowBackslashEscapingAnyCharacter`` and
+``allowUnquotedControlChars``) does parse them once bare ``None``/``True``/
+``False`` are rewritten to JSON literals: a probe matched ``ast.literal_eval``
+on 3,000 of 3,000 random reprs. The parse stays a UDF because that rewrite
+is a regex, and a regex cannot tell a bare ``None`` from one inside a quoted
+name (``'name': 'Act: None'``); and because Python reprs carry escapes JSON
+does not have, such as ``\\x..``.
+
+The reference ``eval()``s the cells row-by-row (`loader.py:146,:154,:175,
+:197,:207,:258,:270,:302`); here an Arrow-batched pandas UDF wraps
+``ast.literal_eval`` (never ``eval`` — deviation D3) with the same
+is-valid-string guard semantics (`loader.py:31-34`): non-string/empty cells
+parse to NULL.
 """
 
 from __future__ import annotations
