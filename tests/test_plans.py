@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from conftest import SF_DIR
 
 from the_movie_database_import_spark.plans import REGISTRY
+from tools.plan_manifest import job_ids
 
 
 def _plan(spark, name: str) -> str:
@@ -527,14 +528,6 @@ def test_scan_jsonl_parses_and_quarantines(spark, tmp_path):
         )
 
 
-def _job_ids(spark) -> set[int]:
-    """Ids of every job started so far (outside a job group), after the
-    listener bus has delivered every pending job-start event."""
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return set(sc.statusTracker().getJobIdsForGroup(None))
-
-
 @pytest.mark.parametrize(
     "name", [n for n, s in sorted(REGISTRY.items()) if s.headline]
 )
@@ -543,9 +536,9 @@ def test_headline_rebuild_starts_no_job(spark, name):
     schemas are cached: the only build-time jobs were parquet schema
     inference, and load_table infers each file version once."""
     REGISTRY[name].spark_fn(spark, SF_DIR)
-    before = _job_ids(spark)
+    before = job_ids(spark)
     REGISTRY[name].spark_fn(spark, SF_DIR)
-    assert _job_ids(spark) == before
+    assert job_ids(spark) == before
 
 
 def test_headline_second_pass_compiles_nothing(spark):
@@ -595,12 +588,12 @@ def test_load_table_reinfers_rewritten_file(spark, tmp_path):
     write("us")
     micros = instants(load_table(spark, str(tmp_path), "events"))
     write("ns")
-    before = _job_ids(spark)
+    before = job_ids(spark)
     nanos = load_table(spark, str(tmp_path), "events")
-    assert _job_ids(spark) != before, "the rewritten file was not re-inferred"
-    before = _job_ids(spark)
+    assert job_ids(spark) != before, "the rewritten file was not re-inferred"
+    before = job_ids(spark)
     load_table(spark, str(tmp_path), "events")
-    assert _job_ids(spark) == before, "an unchanged file was re-inferred"
+    assert job_ids(spark) == before, "an unchanged file was re-inferred"
     assert instants(nanos) == micros
 
 
@@ -1408,3 +1401,117 @@ def test_graph_pagerank_iteration_paid_once(spark):
     assert "TakeOrderedAndProject" in plan
     assert "Join" not in plan, "consumer plan must not re-run the iteration"
     assert "Parquet" not in plan
+
+
+def test_simhash_first_band_emission_no_candidate_aggregate(spark):
+    """SimHash near-dup: the banded self-join keys on (band, band value)
+    and emits each pair at its first colliding band, so no aggregate
+    (distinct) runs over the candidate stream; the Hamming verify is a
+    bit_count on the XOR inside the join."""
+    plan = _plan(spark, "q_dedup_simhash")
+    assert re.search(r"BroadcastHashJoin \[band_id#\d+, band_val", plan), plan
+    assert "HashAggregate" not in plan and "SortAggregate" not in plan
+    assert "bit_count(" in plan
+
+
+def test_incremental_dedup_shuffles_digests_only(spark):
+    """Incremental exact dedup: every hash exchange is keyed on a digest
+    (the corpus side-table, the batch winners), so corpus text never
+    moves; the within-batch winner is a map-side-combined min aggregate,
+    never a window."""
+    plan = _plan(spark, "q_incremental_dedup")
+    groups = re.findall(r"Exchange hashpartitioning\(([^,]*)", plan)
+    assert groups and all("digest" in g for g in groups), groups
+    assert "partial_min(doc_id" in plan
+    assert "windowspecdefinition" not in plan
+
+
+@pytest.mark.parametrize(
+    "name", ["q_dedup_substring_spans", "q_dedup_spans_incremental"]
+)
+def test_span_dedup_winner_aggregate_and_in_row_rebuild(spark, name):
+    """Span dedup (full and daily): the per-gram winner is a map-side-
+    combined min(struct) aggregate, never a window over digests, and the
+    text rebuild drops the losing spans in-row with array_except."""
+    plan = _plan(spark, name)
+    assert "partial_min(struct(" in plan
+    assert "windowspecdefinition" not in plan
+    assert "array_except(" in plan
+
+
+def test_token_budget_global_window_over_census_only(spark):
+    """Token-budget selection: the prefix-sum window with no partition
+    columns runs over the quantized-score census (its single-partition
+    exchange is fed by the census aggregate), and the boundary bucket's
+    running sum over doc rows is partitioned by its bucket key."""
+    lines = _plan(spark, "q_select_token_budget").splitlines()
+    singles = [i for i, line in enumerate(lines) if "Exchange SinglePartition" in line]
+    assert singles
+    for i in singles:
+        assert "HashAggregate(keys=[quality_q" in lines[i + 1], lines[i + 1]
+    assert re.search(
+        r"windowspecdefinition\(quality_q#\d+L?, doc_id", "\n".join(lines)
+    )
+
+
+def test_corpus_mix_temperature_filters_scan_side(spark):
+    """Temperature mixing: only the per-group count table shuffles (on
+    lang); the derived rates broadcast back and the md5 bucket filter
+    rides the broadcast join at the scan, so corpus rows never shuffle."""
+    plan = _plan(spark, "q_corpus_mix_temperature")
+    groups = re.findall(r"Exchange hashpartitioning\(([^,]*)", plan)
+    assert groups and all(g.startswith("lang") for g in groups), groups
+    assert re.search(
+        r"BroadcastHashJoin \[lang#\d+\], \[lang#\d+\], Inner, BuildRight, \(substr\(md5",
+        plan,
+    )
+
+
+@pytest.mark.parametrize(
+    "name, window_keys",
+    [("q_token_kl_divergence", ("lang", "token")), ("q_token_entropy", ("source",))],
+)
+def test_token_census_is_the_only_corpus_pass(spark, name, window_keys):
+    """Token KL / entropy: one documents scan feeds one map-side-combined
+    (group, token) count census; every total comes from a window
+    partitioned over that census, never a second corpus scan."""
+    plan = _plan(spark, name)
+    assert plan.count("FileScan parquet") == 1
+    assert re.search(
+        rf"HashAggregate\(keys=\[{window_keys[0]}#\d+, token#\d+\], functions=\[partial_count",
+        plan,
+    )
+    for key in window_keys:
+        assert re.search(rf"windowspecdefinition\({key}#\d+,", plan), key
+
+
+def test_bootstrap_se_one_aggregate_one_scan(spark):
+    """Poisson bootstrap: all replicate sums ride ONE hash aggregate
+    (partial + final) over one events scan: no second data pass, no
+    resampling loop."""
+    plan = _plan(spark, "q_bootstrap_se")
+    assert plan.count("FileScan parquet") == 1
+    assert plan.count("HashAggregate(") == 2
+    assert "partial_sum(" in plan
+
+
+def test_trigram_search_semi_joins_candidates(spark):
+    """Trigram LIKE: the counted trigram-index hits prune the documents
+    through a broadcast LEFT SEMI join on doc_id, and the exact contains
+    test verifies at the scan."""
+    plan = _plan(spark, "q_substring_search_trgm")
+    assert re.search(
+        r"BroadcastHashJoin \[doc_id#\d+L?\], \[doc_id#\d+L?\], LeftSemi", plan
+    )
+    assert "Contains(text" in plan
+    assert re.search(r"HashAggregate\(keys=\[doc_id#\d+L?\], functions=\[count\(1\)", plan)
+
+
+def test_dedup_survivors_max_by_aggregate_no_cluster_window(spark):
+    """Survivor selection: the per-cluster argmax is one map-side-
+    combinable max_by aggregate, never a window partitioned by cluster,
+    over the checkpointed connected-components labels."""
+    plan = _plan(spark, "q_dedup_survivors")
+    assert "partial_max_by(doc_id" in plan
+    assert "windowspecdefinition" not in plan
+    assert "Scan ExistingRDD" in plan

@@ -79,7 +79,8 @@ def load_inputs(spark: SparkSession, base_dir: str) -> dict[str, DataFrame]:
     shard files, each with its own header — the 100x-input posture: the
     three nested-cell CSVs are multiLine and therefore one task PER FILE,
     so sharding them is the only way the parse stage parallelizes
-    (`tools/bench_etl.py --shards N` measures it). Ratings scans with
+    (`tests/test_tmdb_etl.py::test_sharded_input_parallelism_and_policy_determinism`
+    pins it). Ratings scans with
     ``multiline=False``: the file is flat (no quoted newlines), which makes
     even a single 26M-row file LINE-SPLITTABLE — full parallelism without
     sharding — and its only consumer is an order-insensitive mean, so the

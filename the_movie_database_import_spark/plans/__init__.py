@@ -31,12 +31,20 @@ def _wrap_release(spec: QuerySpec) -> QuerySpec:
 
     ASSUMPTION: builders and executions interleave strictly (build q1 ->
     execute q1 -> build q2 -> ...), which is how the driver, bench.py, and
-    tests consume the registry. A consumer that builds several DataFrames
-    before executing the first would have its earlier queries' caches
-    released mid-flight — results stay CORRECT (unpersist only drops the
-    materialized blocks; lineage recomputes), but the intra-query cache
-    reuse degrades to recomputation. If such a consumer appears, release on
-    execution boundaries (QueryExecutionListener) instead of build time."""
+    tests consume the registry. A consumer that builds q2 before executing
+    q1 releases q1's resources mid-flight, with two outcomes:
+
+    - tracked SQL caches (``session.tracked_cache``): q1 still returns
+      correct rows, but recomputes what the cache held;
+    - tracked result checkpoints (``session.track_result_checkpoint``:
+      ``graph.pagerank``'s rank table, ``dedup.connected_components``'
+      label table, ``q_pipeline_end_to_end``'s span checkpoint): q1's
+      execution FAILS with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``, because
+      localCheckpoint truncated the lineage that could recompute the
+      freed blocks (``session._TRACKED_RESULT_CHECKPOINTS``).
+
+    ROADMAP direction 4 (query-scoped resource lifetimes) replaces this
+    build-time release with one released when the query's execution ends."""
     inner = spec.spark_fn
 
     @functools.wraps(inner)

@@ -15,7 +15,7 @@ over the SAME logical query (`flagship_star_revenue_over`) at sf0.1:
 3. verifies both variants return identical rows,
 4. times both (median of 3 after an untimed warmup, same methodology as
    bench.py — execution into the noop sink),
-5. prints one JSON line with the timings + plan facts for PLANS.md.
+5. prints one JSON line with the timings + plan facts.
 
 Run: PYTHONPATH=/root/repo python tools/bucketed_showcase.py [sf_dir]
 The one-time bucketed-write cost is also reported: at cluster scale it is

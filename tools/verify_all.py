@@ -7,7 +7,7 @@ re-runs, as one command (see also .claude/skills/verify/SKILL.md).
 Runs, in order, each as a subprocess (so one Spark session's state can't
 leak into the next gate):
 
-1. pytest tests/ -q                      (full local gate, sf0.001)
+1. pytest tests/                         (the ROADMAP tier-1 command, sf0.001)
 2. exact_parity at sf0.01 AND sf0.1      (driver-exact oracle sweeps)
 3. exact_parity VANILLA mode at sf0.01   (driver-environment simulation)
 4. pytest perfbench/test_smoke.py        (the declared benchmark still runs)
@@ -50,8 +50,17 @@ def run(name: str, cmd: list[str], env: dict | None = None) -> dict:
 def main() -> int:
     fast = "--fast" in sys.argv
     py = sys.executable
+    # The ROADMAP tier-1 command: the same flags, environment and timeout.
+    tier1 = (
+        ["timeout", "-k", "10", "2670", py, "-m", "pytest", "tests/", "-q"]
+        + ["--continue-on-collection-errors", "-p", "no:cacheprovider"]
+    )
+    tier1_env = {
+        "SPARK_GRAFT_CPUS": str(len(os.sched_getaffinity(0))),
+        "SPARK_LOCAL_DIRS": "/tmp/spark-local",
+    }
     gates = [
-        ("pytest", [py, "-m", "pytest", "tests/", "-q"], None),
+        ("pytest", tier1, tier1_env),
         ("parity_sf0.01", [py, "tools/exact_parity.py", "/root/testdata/sf0.01"], None),
         ("parity_sf0.1", [py, "tools/exact_parity.py", "/root/testdata/sf0.1"], None),
         (
