@@ -33,6 +33,27 @@ RECHECK = (
     "q_dedup_minhash_incremental",
     "q_dedup_minhash_lsh",
     "q_dedup_savings_minhash",
+    # joins of unknown size left to the planner (maybe_broadcast's count
+    # probe deleted): every query whose plan-manifest row moved
+    "q_apply_delta",
+    "q_corpus_mix_temperature",
+    "q_decontaminate_containment",
+    "q_dedup_setjoin_prefix",
+    "q_dsir_importance",
+    "q_entity_resolution",
+    "q_er_sorted_neighborhood",
+    "q_fuzzy_name_pairs",
+    "q_heavy_hitters",
+    "q_oov_rate",
+    "q_pipeline_end_to_end",
+    "q_shipping_priority_q3",
+    "q_source_vocab_overlap",
+    "q_substring_search_trgm",
+    "q_text_bigram_nll",
+    "q_text_decontaminate",
+    "q_text_tfidf_cosine_pairs",
+    "q_text_unigram_nll",
+    "q_vocab_growth",
 )
 
 

@@ -671,12 +671,12 @@ def test_connected_components_single_action_per_iteration(spark, monkeypatch):
     # in Spark 4 and classic.dataframe.DataFrame overrides count, so a spy
     # on the base never fires (r12 fix — the assertion was vacuous before).
     from pyspark.sql.classic.dataframe import DataFrame
-    from the_movie_database_import_spark.operators import dedup
+    from the_movie_database_import_spark import session
     from the_movie_database_import_spark.operators.dedup import connected_components
 
     # force the distributed loop: this test pins ITS job shape (the r13
     # driver union-find fast path would short-circuit a 7-node graph)
-    monkeypatch.setattr(dedup, "CC_DRIVER_GRAPH_ROWS", 0)
+    monkeypatch.setattr(session, "DRIVER_BUDGET_ROWS", 0)
 
     calls: list[int] = []
     orig = DataFrame.count
@@ -703,9 +703,7 @@ def test_connected_components_single_action_per_iteration(spark, monkeypatch):
     # execution shape; the broadcast path's correctness is pinned by
     # test_connected_components_shortcut_identical and the chain/hand-graph
     # tests, which run it unpatched.
-    from the_movie_database_import_spark import session as _session
-
-    monkeypatch.setattr(_session, "maybe_broadcast", lambda df, **_k: df)
+    monkeypatch.setattr(session, "maybe_broadcast", lambda df, **_k: df)
 
     sc = spark.sparkContext
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
@@ -827,10 +825,10 @@ def test_connected_components_chain_log_rounds(spark, monkeypatch):
     converges in 11 shortcut rounds where plain would need 300. The r13
     driver fast path is disabled so the DISTRIBUTED loop's round counts
     are what this test pins."""
-    from the_movie_database_import_spark.operators import dedup
+    from the_movie_database_import_spark import session
     from the_movie_database_import_spark.operators.dedup import connected_components
 
-    monkeypatch.setattr(dedup, "CC_DRIVER_GRAPH_ROWS", 0)
+    monkeypatch.setattr(session, "DRIVER_BUDGET_ROWS", 0)
 
     def chain(n):
         nodes = spark.createDataFrame([(i,) for i in range(1, n + 1)], "node long")
@@ -898,7 +896,7 @@ def test_connected_components_driver_path_identical(spark, monkeypatch):
     the shortcut pin (chain + clique + star + bridge + singletons), plus
     an edge with an endpoint outside the node universe (both paths must
     ignore it)."""
-    from the_movie_database_import_spark.operators import dedup
+    from the_movie_database_import_spark import session
     from the_movie_database_import_spark.operators.dedup import (
         connected_components,
     )
@@ -921,7 +919,7 @@ def test_connected_components_driver_path_identical(spark, monkeypatch):
     ]
     got_fast = {(r.doc_id, r.cluster_rep, r.is_kept) for r in fast.collect()}
 
-    monkeypatch.setattr(dedup, "CC_DRIVER_GRAPH_ROWS", 0)
+    monkeypatch.setattr(session, "DRIVER_BUDGET_ROWS", 0)
     st: dict = {}
     dist = connected_components(nodes, edges, stats=st)
     got_dist = {(r.doc_id, r.cluster_rep, r.is_kept) for r in dist.collect()}
@@ -939,7 +937,7 @@ def test_connected_components_contraction_finish_identical(spark, monkeypatch):
     mixed topology as the driver-path pin, including a chain (so round 1
     genuinely does NOT converge and the contracted graph is non-trivial)
     and an out-of-universe edge endpoint."""
-    from the_movie_database_import_spark.operators import dedup
+    from the_movie_database_import_spark import session
     from the_movie_database_import_spark.operators.dedup import (
         connected_components,
     )
@@ -955,7 +953,7 @@ def test_connected_components_contraction_finish_identical(spark, monkeypatch):
     edges = spark.createDataFrame(edges_py, "doc_a long, doc_b long")
     assert len(edges_py) > 30  # over the patched budget -> no plain fast path
 
-    monkeypatch.setattr(dedup, "CC_DRIVER_GRAPH_ROWS", 30)
+    monkeypatch.setattr(session, "DRIVER_BUDGET_ROWS", 30)
     st_c: dict = {}
     mixed = connected_components(nodes, edges, stats=st_c)
     assert mixed.dtypes == [
@@ -966,7 +964,7 @@ def test_connected_components_contraction_finish_identical(spark, monkeypatch):
     got_mixed = {(r.doc_id, r.cluster_rep, r.is_kept) for r in mixed.collect()}
     assert st_c["rounds"] == 1  # exactly one distributed round ran
 
-    monkeypatch.setattr(dedup, "CC_DRIVER_GRAPH_ROWS", 0)
+    monkeypatch.setattr(session, "DRIVER_BUDGET_ROWS", 0)
     st_d: dict = {}
     dist = connected_components(nodes, edges, stats=st_d)
     got_dist = {(r.doc_id, r.cluster_rep, r.is_kept) for r in dist.collect()}
@@ -3611,7 +3609,7 @@ def test_savings_census_minhash_edge_plan_paid_once(spark, monkeypatch):
     # base never fire in Spark 4 (classic.dataframe overrides the method)
     from pyspark.sql.classic.dataframe import DataFrame
 
-    from the_movie_database_import_spark.operators import dedup
+    from the_movie_database_import_spark import session
     from the_movie_database_import_spark.operators.dedup import (
         dedup_savings_census,
         minhash_lsh_pairs,
@@ -3619,7 +3617,7 @@ def test_savings_census_minhash_edge_plan_paid_once(spark, monkeypatch):
 
     # this pins the DISTRIBUTED loop's pay-once checkpoint shape; the r13
     # driver fast path would skip the round checkpoints on 6 docs
-    monkeypatch.setattr(dedup, "CC_DRIVER_GRAPH_ROWS", 0)
+    monkeypatch.setattr(session, "DRIVER_BUDGET_ROWS", 0)
 
     docs = spark.createDataFrame(
         pd.DataFrame(
@@ -3830,7 +3828,7 @@ def test_bpe_train_distributed_loop_matches_python_model(spark, monkeypatch):
     merge-table equality — the CC treatment applied to BPE."""
     from collections import Counter
 
-    from the_movie_database_import_spark.operators import bpe as bpe_mod
+    from the_movie_database_import_spark import session
     from the_movie_database_import_spark.operators.bpe import train_bpe
 
     docs = _docs(spark)
@@ -3845,7 +3843,7 @@ def test_bpe_train_distributed_loop_matches_python_model(spark, monkeypatch):
         (r.merge_rank, r.left, r.right, r.merged, r.pair_count)
         for r in train_bpe(docs, n_merges=8).orderBy("merge_rank").collect()
     ]
-    monkeypatch.setattr(bpe_mod, "BPE_DRIVER_CENSUS_ROWS", 0)
+    monkeypatch.setattr(session, "DRIVER_BUDGET_ROWS", 0)
     dist = [
         (r.merge_rank, r.left, r.right, r.merged, r.pair_count)
         for r in train_bpe(docs, n_merges=8).orderBy("merge_rank").collect()
@@ -4038,7 +4036,7 @@ def test_iterative_operators_leave_no_pinned_rdds(spark, monkeypatch):
     must retire their own snapshots (the r13 ext-bench interference
     finding). After connected_components and train_bpe complete, at most
     the operator's single RESULT checkpoint may remain pinned."""
-    from the_movie_database_import_spark.operators import dedup
+    from the_movie_database_import_spark import session
     from the_movie_database_import_spark.operators.bpe import train_bpe
     from the_movie_database_import_spark.operators.dedup import (
         connected_components,
@@ -4047,7 +4045,7 @@ def test_iterative_operators_leave_no_pinned_rdds(spark, monkeypatch):
 
     # exercise the DISTRIBUTED loop's retirement discipline (the driver
     # fast path would skip the per-round checkpoints on this small graph)
-    monkeypatch.setattr(dedup, "CC_DRIVER_GRAPH_ROWS", 0)
+    monkeypatch.setattr(session, "DRIVER_BUDGET_ROWS", 0)
     sc = spark.sparkContext
     before = persistent_rdd_ids(sc)
 
@@ -4060,12 +4058,9 @@ def test_iterative_operators_leave_no_pinned_rdds(spark, monkeypatch):
     after_cc = persistent_rdd_ids(sc) - before
     assert len(after_cc) <= 1, f"connected_components leaked pins: {after_cc}"
 
-    # exercise the DISTRIBUTED trainer's retirement too (ADVICE r13: every
-    # fixture census fits the driver budget, so unpatched this covered
-    # only the fast path's absence of checkpoints)
-    from the_movie_database_import_spark.operators import bpe as bpe_mod
-
-    monkeypatch.setattr(bpe_mod, "BPE_DRIVER_CENSUS_ROWS", 0)
+    # the zero driver budget sends the trainer down its DISTRIBUTED path
+    # too (ADVICE r13: every fixture census fits the driver budget, so
+    # unpatched this covered only the fast path's absence of checkpoints)
     docs = _docs(spark)
     train_bpe(docs, n_merges=5).count()
     after_bpe = persistent_rdd_ids(sc) - before - after_cc

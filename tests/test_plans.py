@@ -396,8 +396,11 @@ def test_pipeline_end_to_end_plan_shape(spark):
     span-deduped increment is an eager localCheckpoint (the r13
     plan-truncation midpoint), so the COMPOSITE plan shows the back half
     (decontaminate -> ... -> packing -> census) reading a LogicalRDD: pin
-    the broadcast decontamination joins, the packing window, and the
-    no-python/no-cartesian invariants there. The PROLOGUE (delta ->
+    the decontamination joins, the packing window, and the
+    no-python/no-cartesian invariants there. The gram probe broadcasts in
+    the static plan; the anti-join's id set is an aggregate over the
+    stats-less checkpoint, so the static plan shuffles it and AQE
+    broadcasts it once its observed size is known. The PROLOGUE (delta ->
     incremental dedup -> span dedup) is pinned on its own executed plan:
     the deduped increment is an eager localCheckpoint (r14 — it was a
     cache in r13; the checkpoint serves the span stage's two reads like
@@ -405,16 +408,16 @@ def test_pipeline_end_to_end_plan_shape(spark):
     Catalyst pass over the span stage), and the within-batch winner is a
     min AGGREGATE on the digest (skew-proof), never a digest-partitioned
     window."""
-    plan = (
-        REGISTRY["q_pipeline_end_to_end"]
-        .spark_fn(spark, SF_DIR)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    composite = REGISTRY["q_pipeline_end_to_end"].spark_fn(spark, SF_DIR)
+    plan = composite._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
-    assert plan.count("BroadcastHashJoin") >= 2, plan  # gram probe + anti-join
+    assert plan.count("BroadcastHashJoin") >= 1, plan  # gram probe
+    composite.collect()
+    final = composite._jdf.queryExecution().executedPlan().toString()
+    final = final.split("Initial Plan")[0]
+    assert "isFinalPlan=true" in final, final
+    assert final.count("BroadcastHashJoin") >= 2, final  # gram probe + anti-join
     # the back half reads the materialized span checkpoint, not a replay
     # of the prologue
     assert "ExistingRDD" in plan or "LogicalRDD" in plan, plan
@@ -873,11 +876,12 @@ def test_fuzzy_pairs_blocked_join_no_cartesian(spark):
 
 
 def test_maybe_broadcast_budget_guard_both_paths(spark):
-    """maybe_broadcast (VERDICT r06 #3): within budget the side carries the
-    broadcast hint (BroadcastHashJoin even with the auto threshold off);
-    past budget the hint is withheld and the join plans as a shuffle join.
-    Both paths return identical rows, and the probe path registers its
-    cache with the engine's release discipline."""
+    """maybe_broadcast (VERDICT r06 #3) decides from a known size only:
+    within budget the side carries the broadcast hint (BroadcastHashJoin
+    even with the auto threshold off); past budget the hint is withheld and
+    the join plans as a shuffle join. Both paths return identical rows,
+    neither starts a job nor registers a cache, and a call without
+    ``n_rows`` is an error."""
     from the_movie_database_import_spark import session as S
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -886,48 +890,33 @@ def test_maybe_broadcast_budget_guard_both_paths(spark):
         big = spark.range(5000).withColumnRenamed("id", "k")
         small = spark.range(0, 5000, 7).withColumnRenamed("id", "k")
 
-        before = len(S._TRACKED_CACHES)
-        hinted = big.join(S.maybe_broadcast(small), "k", "left_anti")
+        caches, jobs = len(S._TRACKED_CACHES), job_ids(spark)
+        hinted = big.join(S.maybe_broadcast(small, n_rows=715), "k", "left_anti")
+        fallback = big.join(
+            S.maybe_broadcast(small, n_rows=715, budget_rows=10), "k", "left_anti"
+        )
+        assert job_ids(spark) == jobs
+        assert len(S._TRACKED_CACHES) == caches
+
         p1 = hinted._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in p1, p1
-        assert len(S._TRACKED_CACHES) == before + 1  # probe cached + tracked
-
-        n_mid = len(S._TRACKED_CACHES)
-        fallback = big.join(
-            S.maybe_broadcast(small, budget_rows=10), "k", "left_anti"
-        )
         p2 = fallback._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" not in p2, p2
-        # ADVICE r07: the OVER-budget path must not retain its probe cache —
-        # a side that failed the budget is by definition large, and keeping
-        # it persisted until the next release_caches() is exactly the
-        # pressure the guard exists to avoid
-        assert len(S._TRACKED_CACHES) == n_mid, (
-            "over-budget probe cache must be released immediately"
-        )
-
         assert sorted(r.k for r in hinted.collect()) == sorted(
             r.k for r in fallback.collect()
         )
 
-        # known-size path: no probe job, no cache registered
-        n_before = len(S._TRACKED_CACHES)
-        hinted2 = big.join(S.maybe_broadcast(small, n_rows=715), "k", "left_anti")
-        assert len(S._TRACKED_CACHES) == n_before
-        assert "BroadcastHashJoin" in hinted2._jdf.queryExecution().executedPlan().toString()
+        with pytest.raises(TypeError):
+            S.maybe_broadcast(small)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        S.release_caches()
 
 
 def test_apply_delta_budget_guard_site(spark):
-    """apply_delta default (broadcast_changes=None) routes the victim set
-    through the budget guard: a daily-sized feed broadcasts (zero snapshot
-    shuffle); a backfill-sized feed (budget forced to zero via
-    broadcast_changes=False, the documented escape hatch) shuffles — and
-    the two MERGE results agree row-for-row."""
-    from pyspark.sql import functions as F
-
+    """apply_delta leaves the victim set to the planner: at sf0.001 the
+    feed is small, so the snapshot streams through a BroadcastHashJoin
+    (zero snapshot shuffle) with no job at build time, and the MERGE equals
+    a reference built from plain DataFrame set operations."""
     from the_movie_database_import_spark.operators.delta import apply_delta
     from the_movie_database_import_spark.sources.readers import load_table
 
@@ -937,14 +926,18 @@ def test_apply_delta_budget_guard_site(spark):
     )
     dels = snap.filter(F.col("doc_id") % 97 == 0).select("doc_id")
 
-    guarded = apply_delta(snap, ups, dels)
-    plan = guarded._jdf.queryExecution().executedPlan().toString()
+    jobs = job_ids(spark)
+    merged = apply_delta(snap, ups, dels)
+    assert job_ids(spark) == jobs
+    plan = merged._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
 
-    shuffled = apply_delta(snap, ups, dels, broadcast_changes=False)
-    a = sorted(map(tuple, guarded.collect()))
-    b = sorted(map(tuple, shuffled.collect()))
-    assert a == b
+    victims = ups.select("doc_id").union(dels)
+    reference = snap.exceptAll(snap.join(victims, "doc_id", "left_semi")).union(ups)
+    got = sorted(map(tuple, merged.collect()))
+    assert got == sorted(map(tuple, reference.collect()))
+    assert any(t == "updated" for _, t in got)
+    assert len(got) < snap.count()  # the deletes removed rows
 
 
 def test_status_store_read_after_drain(spark):

@@ -113,13 +113,14 @@ def train_bpe(
 ) -> DataFrame:
     """Learn up to ``n_merges`` BPE merges; returns the merge table
     ``(merge_rank, left, right, merged, pair_count)`` — tiny (one row per
-    merge). When the word census fits ``BPE_DRIVER_CENSUS_ROWS`` it is
-    collected once and trained with the classic local loop (r13 fast
-    path); otherwise the merge table is assembled on the driver from one
-    1-row argmax collect per round while ALL counting/merging stays
-    distributed over the word census. Both paths produce the identical
-    merge table (pinned against the same python reference model). Stops
-    early when no pair reaches ``min_count``.
+    merge). When the word census fits the driver budget
+    (``session.DRIVER_BUDGET_ROWS``) it is collected once and trained with
+    the classic local loop (r13 fast path); otherwise the merge table is
+    assembled on the driver from one 1-row argmax collect per round while
+    ALL counting/merging stays distributed over the word census. Both
+    paths produce the identical merge table (pinned against the same
+    python reference model). Stops early when no pair reaches
+    ``min_count``.
 
     Job shape: the per-round checkpoint is LAZY (``eager=False``) so the
     NEXT round's argmax job materializes it — one job per round instead of
@@ -131,7 +132,11 @@ def train_bpe(
     store (the r13 ext-bench interference finding)."""
     from pyspark.sql import Observation
 
-    from ..session import local_checkpoint_rdd_id, unpersist_rdd_ids
+    from ..session import (
+        DRIVER_BUDGET_ROWS,
+        local_checkpoint_rdd_id,
+        unpersist_rdd_ids,
+    )
 
     spark = docs.sparkSession
     sc = spark.sparkContext
@@ -155,7 +160,7 @@ def train_bpe(
         "merge_rank bigint, left string, right string, merged string, "
         "pair_count bigint"
     )
-    if n_words <= BPE_DRIVER_CENSUS_ROWS:
+    if n_words <= DRIVER_BUDGET_ROWS:
         # Driver fast path (r13 opt, guide §1/§5 trade): the distributed
         # loop pays one full job ROUND-TRIP per merge (~0.1-0.25 s each on
         # this harness, measured against a 98 ms trivial-collect floor) to
@@ -227,14 +232,6 @@ def train_bpe(
     return spark.createDataFrame(spark.sparkContext.parallelize(merges, 1), schema)
 
 
-# Census-row budget for the driver training fast path: one scan-task's
-# worth of rows (the engine's ~64k rows/task sizing heuristic). Under it,
-# n_merges full job round-trips cost more than collecting the census and
-# looping locally; far over it, the local loop's O(vocab x word_len) python
-# pass per merge would dwarf the job latency it saves.
-BPE_DRIVER_CENSUS_ROWS = 65536
-
-
 def _train_bpe_local(
     data: list[tuple[list[str], int]], n_merges: int, min_count: int
 ) -> list[tuple[int, str, str, str, int]]:
@@ -292,8 +289,8 @@ def bpe_encode_counts(
     checkpoints every ``checkpoint_every`` rounds so expression depth stays
     bounded instead of nesting n_merges fold lambdas into one tree."""
     from ..session import (
-        BROADCAST_BUDGET_ROWS,
         local_checkpoint_rdd_id,
+        maybe_broadcast,
         tracked_cache,
         unpersist_rdd_ids,
     )
@@ -338,14 +335,12 @@ def bpe_encode_counts(
     # last chain checkpoint — it is dead weight once the cache holds the
     # counts. The cache must stay retained on BOTH broadcast paths: the
     # freed checkpoint cannot back a lineage recompute (localCheckpoint
-    # truncates lineage), so this deliberately does not route through
-    # maybe_broadcast, whose over-budget path unpersists the probe cache.
+    # truncates lineage).
     word_counts = tracked_cache(word_counts)
     n_vocab = word_counts.count()
     if prev_id is not None:
         unpersist_rdd_ids(sc, {prev_id})
-    if n_vocab <= BROADCAST_BUDGET_ROWS:
-        word_counts = F.broadcast(word_counts)
+    word_counts = maybe_broadcast(word_counts, n_rows=n_vocab)
     exploded = docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(tokens(F.col(text_col))).alias("word"),

@@ -61,15 +61,12 @@ def contamination_counts(
     explode in-row and probe the broadcast inner-join, then aggregate by doc
     id. Corpus rows are never shuffled pre-aggregate, and the aggregate's
     input is only the MATCHED (doc, gram) pairs — tiny unless the corpus is
-    thoroughly contaminated. The gram-table broadcast is budget-guarded
-    (:func:`..session.maybe_broadcast`): a pathological "benchmark" the
-    size of a corpus falls back to a shuffle join instead of blowing the
-    broadcast, and the probe's count materializes the cached gram table
-    the join reads anyway. NOTE the probe is EAGER: calling this runs the
-    guard's count() job at DataFrame-construction time (ADVICE r07).
+    thoroughly contaminated. The gram table carries no hint: the planner
+    broadcasts it while its estimated (or, under AQE, observed) size is
+    under ``autoBroadcastJoinThreshold``, so a pathological "benchmark"
+    the size of a corpus plans a shuffle join instead of blowing the
+    broadcast. Building the result starts no Spark job.
     """
-    from ..session import maybe_broadcast
-
     if n <= 0:
         raise ValueError(f"n must be positive: {n}")
     set_cols = [bench_set_col] if bench_set_col else []
@@ -84,7 +81,7 @@ def contamination_counts(
         F.col(id_col), F.explode(_gram_hashes(F.col(text_col), n)).alias("gram_h")
     )
     return (
-        corpus_grams.join(maybe_broadcast(bench_grams), "gram_h")
+        corpus_grams.join(bench_grams, "gram_h")
         .groupBy(id_col, *set_cols)
         .agg(F.count(F.lit(1)).alias("n_contaminated_grams"))
     )
@@ -106,19 +103,15 @@ def decontaminate(
     set (itself the output of :func:`contamination_counts`, which is tiny:
     one id per contaminated doc). Corpus rows stream through unshuffled;
     the full row survives, so this drops in anywhere in a pipeline. The
-    id-set broadcast is budget-guarded like the gram table: a corpus that
-    turns out thoroughly contaminated falls back to a shuffle anti join.
-    NOTE the guard's count probe is EAGER — calling this runs Spark jobs
-    (the contamination counts) at DataFrame-construction time.
+    id set is left to the planner like the gram table: a corpus that
+    turns out thoroughly contaminated plans a shuffle anti join.
     """
-    from ..session import maybe_broadcast
-
     contaminated = (
         contamination_counts(corpus, benchmark, n, text_col, id_col, bench_text_col)
         .filter(F.col("n_contaminated_grams") >= min_grams)
         .select(id_col)
     )
-    return corpus.join(maybe_broadcast(contaminated), id_col, "left_anti")
+    return corpus.join(contaminated, id_col, "left_anti")
 
 
 def containment_scores(
@@ -145,16 +138,12 @@ def containment_scores(
     Plan shape: the denominator is computed IN-ROW (``word_shingles``
     already emits distinct shingles; ``size`` never leaves the scan),
     and the numerator reuses the sibling's broadcast-probe: benchmark
-    grams hash to 64-bit longs → distinct → budget-guarded broadcast;
+    grams hash to 64-bit longs → distinct → broadcast by the planner;
     corpus grams explode in-row and probe it, so the only aggregate
     input is MATCHED (doc, gram) pairs. The per-doc matched counts
     (one row per contaminated doc, tiny) broadcast-join back onto the
-    in-row totals — corpus rows are never shuffled at any stage. The
-    probe is EAGER like the sibling (the broadcast guard counts at
-    construction time). Ratio = one division of exact integers,
-    rounded 1e-6."""
-    from ..session import maybe_broadcast
-
+    in-row totals — corpus rows are never shuffled at any stage. Ratio =
+    one division of exact integers, rounded 1e-6."""
     if n <= 0:
         raise ValueError(f"n must be positive: {n}")
     bench_grams = (
@@ -168,7 +157,7 @@ def containment_scores(
         F.explode(_gram_hashes(F.col(text_col), n)).alias("gram_h"),
     )
     matched = (
-        corpus_grams.join(maybe_broadcast(bench_grams), "gram_h")
+        corpus_grams.join(bench_grams, "gram_h")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("_m"))
     )
@@ -177,7 +166,7 @@ def containment_scores(
         F.size(word_shingles(F.col(text_col), n)).alias("n_grams"),
     ).filter(F.col("n_grams") > 0)
     return (
-        totals.join(maybe_broadcast(matched), id_col, "left")
+        totals.join(matched, id_col, "left")
         .select(
             id_col,
             F.col("n_grams").cast("bigint").alias("n_grams"),

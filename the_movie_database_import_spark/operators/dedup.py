@@ -497,22 +497,21 @@ def minhash_lsh_pairs_incremental(
     side table's (same contract as the gram side table's ``k``).
 
     NO-CORPUS-SHUFFLE contract (pinned): both sides explode their band
-    arrays IN-MAP; the NEW batch's banded rows go through the
-    budget-guarded broadcast (``maybe_broadcast``), so the corpus-scale
-    side streams through a BroadcastHashJoin with zero Exchange above
-    its scan — at 100 TB corpus / 1 TB daily delta, only delta-derived
-    rows move. A delta too large for the broadcast budget degrades to a
-    shuffle join of delta-banded vs corpus-banded rows (signatures and
-    token-hash arrays, still never corpus text). Within-batch pairs
-    (when enabled) shuffle only new-batch rows by construction.
+    arrays IN-MAP; the NEW batch's banded rows are the side the planner
+    broadcasts, so the corpus-scale side streams through a
+    BroadcastHashJoin with zero Exchange above its scan — at 100 TB
+    corpus / 1 TB daily delta, only delta-derived rows move. A delta past
+    ``autoBroadcastJoinThreshold`` (estimated, or observed under AQE)
+    plans a shuffle join of delta-banded vs corpus-banded rows
+    (signatures and token-hash arrays, still never corpus text).
+    Within-batch pairs (when enabled) shuffle only new-batch rows by
+    construction.
 
     Keep-first convention: this operator returns PAIRS (the family's
     evidence form — `connected_components` / keep-policies compose on
     top); "corpus copy wins" is then the caller dropping new docs that
     appear in any pair, exactly how ``dup_of_existing`` composes for the
     exact family."""
-    from ..session import maybe_broadcast
-
     num_hashes, bands = _minhash_geometry(threshold, num_hashes, bands, target_recall)
     new_sig = minhash_band_signatures(
         new_docs, text_col, id_col, threshold, num_hashes, bands
@@ -523,7 +522,7 @@ def minhash_lsh_pairs_incremental(
         # enumeration — before this cache the within-batch leg re-tokenized
         # and re-signatured the whole batch inside minhash_lsh_pairs
         new_sig = tracked_cache(new_sig)
-    probe = maybe_broadcast(_banded(new_sig, bands, "doc_id"))
+    probe = _banded(new_sig, bands, "doc_id")
     corpus = _banded(seen_bands, bands, "doc_id")
     cross = _verified_pairs(
         corpus, probe, threshold, bands, "doc_id", ordered=False
@@ -535,14 +534,6 @@ def minhash_lsh_pairs_incremental(
     if not include_within_batch:
         return cross
     return cross.unionByName(_minhash_self_pairs(new_sig, threshold, bands, "clique"))
-
-
-# Row budget for the connected-components driver fast path: one scan-task's
-# worth of rows (the engine's ~64k rows/task sizing, the BPE trainer's
-# budget twin). A graph under it in BOTH nodes and edges is union-found on
-# the driver from the two already-materialized init checkpoints; over it,
-# the distributed min-label/pointer-jumping loop runs unchanged.
-CC_DRIVER_GRAPH_ROWS = 65536
 
 
 def _driver_component_min(node_ids, edge_pairs) -> dict:
@@ -638,6 +629,7 @@ def connected_components(
     from pyspark.sql import Observation
 
     from ..session import (
+        DRIVER_BUDGET_ROWS,
         local_checkpoint_rdd_id,
         maybe_broadcast,
         track_result_checkpoint,
@@ -696,7 +688,7 @@ def connected_components(
     # guide §3.1); over budget the joins fall back unhinted to the shuffle
     # plan. n is a bounded driver scalar observed off the init action.
     n = int(obs_nodes.get["n_nodes"] or 0)
-    if n <= CC_DRIVER_GRAPH_ROWS and n_edges <= CC_DRIVER_GRAPH_ROWS:
+    if n <= DRIVER_BUDGET_ROWS and n_edges <= DRIVER_BUDGET_ROWS:
         # Driver fast path (r13 opt — the BPE trainer's budget-guard
         # precedent, guide §1/§5 trade): a graph that fits one scan task's
         # row budget pays more in per-round job ROUND-TRIPS (~40-100 ms
@@ -729,7 +721,7 @@ def connected_components(
     labels = labels.coalesce(nparts)
     rounds = 0
     for _ in range(max_iters):
-        if rounds == 1 and n <= CC_DRIVER_GRAPH_ROWS:
+        if rounds == 1 and n <= DRIVER_BUDGET_ROWS:
             # r14 contraction finish (guide §1.2 "the distributed
             # algorithm"): round-1 labels collapse every node into its
             # neighborhood minimum, so on duplicate-dense graphs (the
@@ -764,8 +756,8 @@ def connected_components(
                 .select("lu", "lv")
                 .distinct()
             )
-            probe = contracted.limit(CC_DRIVER_GRAPH_ROWS + 1).collect()
-            if len(probe) <= CC_DRIVER_GRAPH_ROWS:
+            probe = contracted.limit(DRIVER_BUDGET_ROWS + 1).collect()
+            if len(probe) <= DRIVER_BUDGET_ROWS:
                 node_rows = labels.collect()  # n <= budget rows (~1 MB)
                 final = _driver_component_min(
                     (r["label"] for r in node_rows),
@@ -911,14 +903,11 @@ def jaccard_pairs_exact(
             .filter(F.col("df") > max_token_df)
             .select("block", "tok")
         )
-        # Budget-guarded broadcast anti-join: the hot-token list is
-        # normally tiny (only tokens above the cap), but its size is
-        # data-dependent — the guard falls back to a shuffle anti-join on
-        # a corpus where most tokens are hot instead of blowing the
-        # broadcast. The guard's count probe runs EAGERLY here.
-        from ..session import maybe_broadcast
-
-        inv = inv.join(maybe_broadcast(hot), ["block", "tok"], "left_anti")
+        # Unhinted anti-join: the hot-token list is normally tiny (only
+        # tokens above the cap), but its size is data-dependent — the
+        # planner plans a shuffle anti-join on a corpus where most tokens
+        # are hot instead of blowing the broadcast.
+        inv = inv.join(hot, ["block", "tok"], "left_anti")
     inter = (
         inv.alias("a")
         .join(
@@ -1430,8 +1419,6 @@ def tfidf_cosine_pairs(
         )
     )
     if max_token_df is not None or max_df_frac is not None:
-        from ..session import maybe_broadcast
-
         bdf = w.groupBy("block", "tok").agg(F.count(F.lit(1)).alias("bdf"))
         conds = []
         if max_token_df is not None:
@@ -1443,7 +1430,7 @@ def tfidf_cosine_pairs(
             bn = docs.groupBy(F.col(block_col).alias("block")).agg(
                 F.count(F.lit(1)).alias("_bn")
             )
-            bdf = bdf.join(maybe_broadcast(bn), "block")
+            bdf = bdf.join(bn, "block")
             # bdf > floor(num*n/den)  ⇔  bdf*den > num*n  (positive ints)
             conds.append(
                 (F.col("bdf") > int(min_df_floor))
@@ -1456,7 +1443,7 @@ def tfidf_cosine_pairs(
         for c in conds[1:]:
             cond = cond | c
         hot = bdf.filter(cond).select("block", "tok")
-        w = w.join(maybe_broadcast(hot), ["block", "tok"], "left_anti")
+        w = w.join(hot, ["block", "tok"], "left_anti")
     norms = w.groupBy("doc_id").agg(F.sum(F.col("wq") * F.col("wq")).alias("nq"))
     # Explicit partition count on the posting-list join key (r13 opt, guide
     # §2.4): the join's OUTPUT is quadratic in posting-list length (Σdf²
@@ -1647,10 +1634,8 @@ def substring_search(
         .filter(F.col("_hits") == len(tris))
         .select(id_col)
     )
-    from ..session import maybe_broadcast
-
     return (
-        docs.join(maybe_broadcast(hits), id_col, "left_semi")
+        docs.join(hits, id_col, "left_semi")
         .filter(F.col(text_col).contains(pattern))
         .select(id_col, text_col)
     )
@@ -1933,7 +1918,7 @@ def set_similarity_join_prefix(
     # Rarest-first per-document order: tokens are distinct within a doc, so
     # the (df, tok) struct sort is a deterministic total order.
     ordered = (
-        inv.join(maybe_broadcast(df_census), "tok")
+        inv.join(df_census, "tok")
         .groupBy("doc_id")
         .agg(
             F.sort_array(F.collect_list(F.struct(F.col("df"), F.col("tok")))).alias(

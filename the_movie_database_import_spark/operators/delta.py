@@ -140,7 +140,6 @@ def apply_delta(
     upserts: DataFrame,
     deletes: DataFrame,
     id_col: str = "doc_id",
-    broadcast_changes: bool | None = None,
 ) -> DataFrame:
     """MERGE a change feed into a snapshot: rows whose id appears in
     ``upserts`` are replaced, ids in ``deletes`` are dropped, new upsert
@@ -153,25 +152,16 @@ def apply_delta(
     so the victim-id set (upsert ∪ delete ids, deduped — it is the SMALL
     side) BROADCASTS and the snapshot streams through a broadcast LEFT
     ANTI join with ZERO shuffle of corpus rows — the plan a MERGE INTO on
-    a 100 TB table must have. By default (``broadcast_changes=None``) the
-    hint is BUDGET-GUARDED: :func:`..session.maybe_broadcast` counts the
-    victim set (cheap — ids only) and falls back to an unhinted shuffle
-    anti join for a backfill-sized feed instead of assuming feed ≪ corpus
-    forever. ``True`` forces the hint (feed known small, skip the probe);
-    ``False`` forces the shuffle form. NOTE the default's probe is EAGER:
-    constructing the result runs the victim-set count() job immediately.
+    a 100 TB table must have. The set carries no hint: the planner
+    broadcasts it while its estimated (or, under AQE, observed) size is
+    under ``autoBroadcastJoinThreshold``, and a backfill-sized feed plans a
+    shuffle anti join instead of assuming feed ≪ corpus forever.
     """
-    from ..session import maybe_broadcast
-
     victims = (
         upserts.select(F.col(id_col))
         .unionByName(deletes.select(F.col(id_col)))
         .distinct()
     )
-    if broadcast_changes is None:
-        victims = maybe_broadcast(victims)
-    elif broadcast_changes:
-        victims = F.broadcast(victims)
     return snapshot.join(victims, id_col, "left_anti").unionByName(upserts)
 
 

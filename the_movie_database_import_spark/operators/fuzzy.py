@@ -103,7 +103,7 @@ def fuzzy_pairs_edit1(
     count, not input rows, is the term to watch, and it is bounded by
     ``max_block`` x variants per row.
     """
-    from ..session import maybe_broadcast, tracked_cache
+    from ..session import tracked_cache
 
     base = df.select(
         F.col(id_col).alias("_id"), F.col(name_col).alias("_name")
@@ -121,13 +121,10 @@ def fuzzy_pairs_edit1(
         .select("_id", F.xxhash64("_v").alias("_vh"))
     )
     counts = sides.groupBy("_vh").agg(F.count(F.lit(1)).alias("_n"))
-    # budget-guarded hint: the hot census is normally a handful of rows,
-    # but a pathological corpus (everything hot) would blow a blind
-    # broadcast; the guard's count (EAGER — runs at construction time)
-    # also warms the variant-stream cache the join sides read next
-    kept = sides.join(
-        maybe_broadcast(counts.filter(F.col("_n") > max_block)), "_vh", "left_anti"
-    )
+    # no hint: the hot census is normally a handful of rows, but a
+    # pathological corpus (everything hot) would blow a blind broadcast;
+    # the planner sizes it instead
+    kept = sides.join(counts.filter(F.col("_n") > max_block), "_vh", "left_anti")
     a = kept.select(F.col("_id").alias("id_a"), "_vh")
     b = kept.select(F.col("_id").alias("id_b"), "_vh")
     cands = (
@@ -263,7 +260,7 @@ def sorted_neighborhood_pairs(
     however long the entity names (the shuffle-digests-never-text
     principle).
     """
-    from ..session import maybe_broadcast, tracked_cache
+    from ..session import tracked_cache
 
     base = df.select(F.col(id_col).alias("_id"), F.col(key_col).alias("_key"))
     n_part = max(1, df.sparkSession.sparkContext.defaultParallelism)
@@ -279,7 +276,7 @@ def sorted_neighborhood_pairs(
     )
     rank_w = Window.partitionBy("_pid").orderBy("_key", "_id")
     ranked = (
-        staged.join(maybe_broadcast(offsets), "_pid")
+        staged.join(offsets, "_pid")
         .withColumn(
             "_rank",
             (F.row_number().over(rank_w) + F.col("_off")).cast("bigint"),

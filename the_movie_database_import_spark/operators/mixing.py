@@ -401,12 +401,9 @@ def mix_corpus_temperature(
     Plan shape: identical to :func:`mix_corpus` — one tiny per-group count
     aggregate, the min as an unbounded window over that bounded table, a
     broadcast of the per-group rates (group count is data-dependent, so
-    the budget guard probes — EAGER: calling this runs the count job at
-    construction time), and a scan-side md5-bucket filter; corpus rows
-    are never shuffled.
+    the side carries no hint and the planner sizes it), and a scan-side
+    md5-bucket filter; corpus rows are never shuffled.
     """
-    from ..session import maybe_broadcast
-
     if not (0.0 < alpha <= 1.0):
         raise ValueError(f"alpha must be in (0, 1]: {alpha}")
     counts = docs.groupBy(group_col).agg(F.count(F.lit(1)).alias("_n"))
@@ -425,7 +422,7 @@ def mix_corpus_temperature(
     )
     keep = hash_bucket(F.col(id_col)) < _rate_threshold(F.col("_rate"))
     return (
-        docs.join(maybe_broadcast(rates), group_col)
+        docs.join(rates, group_col)
         .filter(keep)
         .select(*docs.columns)
     )

@@ -30,18 +30,3 @@ def assign_surrogate_ids(
         .withColumn(id_col, F.dense_rank().over(w).cast("bigint"))
     )
 
-
-def attach_surrogate_ids(
-    df: DataFrame, natural_key: str, id_col: str = "surrogate_id"
-) -> DataFrame:
-    """Join surrogate ids back onto the full input. The distinct key set is
-    dimension-sized for the intended workloads, but its cardinality is
-    DATA-dependent (a near-unique "natural key" would be corpus-sized), so
-    the broadcast hint is budget-guarded: within budget the join
-    broadcasts, past it the join shuffles on the key — same result, and
-    the guard's count materializes the cached id map the join reads
-    (EAGER: the id-map job runs at construction time, ADVICE r07)."""
-    from ..session import maybe_broadcast
-
-    ids = assign_surrogate_ids(df, natural_key, id_col)
-    return df.join(maybe_broadcast(ids), natural_key, "left")

@@ -73,20 +73,15 @@ def oov_rate(
 ) -> DataFrame:
     """Per-document out-of-vocabulary rate against a built vocab: the
     fraction of the document's token OCCURRENCES not in ``vocab.token``.
-    The vocab probe is a budget-guarded broadcast (small for every sane
-    vocab; a pathological one falls back to a shuffle join — and the
-    guard's count() probe runs EAGERLY at construction time); documents
-    explode, probe, and re-aggregate on their own id — corpus rows shuffle
-    only as (id, counts) pairs."""
+    The vocab probe is broadcast by the planner (small for every sane
+    vocab; a pathological one plans a shuffle join); documents explode,
+    probe, and re-aggregate on their own id — corpus rows shuffle only as
+    (id, counts) pairs."""
     tok = docs.select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token")
     )
-    from ..session import maybe_broadcast
-
     hit = tok.join(
-        maybe_broadcast(vocab.select("token").withColumn("_in_vocab", F.lit(1))),
-        "token",
-        "left",
+        vocab.select("token").withColumn("_in_vocab", F.lit(1)), "token", "left"
     )
     return hit.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_tokens"),
@@ -124,13 +119,10 @@ def unigram_nll(
     choice as :func:`build_vocab`); the probe broadcasts the per-token
     quantized log-probs (a few hundred MB for a trillion-token corpus's
     multi-million-token vocab) and re-aggregates on the doc id — corpus
-    rows shuffle only as (id, int-sum) pairs. The hint is BUDGET-GUARDED
-    (:func:`..session.maybe_broadcast`): a vocab past the row budget
-    plans the probe as a shuffle join — identical semantics — instead of
-    approaching Spark's 8 GB broadcast hard cap, and the guard's count
-    materializes the cached LM the probe join reads, so the corpus-side
-    token aggregate still runs exactly once. NOTE that count makes this
-    call EAGER — the LM aggregate runs at construction time.
+    rows shuffle only as (id, int-sum) pairs. The LM carries no hint: a
+    vocab past ``autoBroadcastJoinThreshold`` (estimated, or observed
+    under AQE) plans the probe as a shuffle join — identical semantics —
+    instead of approaching Spark's 8 GB broadcast hard cap.
     """
     tok = docs.select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token")
@@ -142,10 +134,8 @@ def unigram_nll(
     logp_q = F.floor(
         F.lit(1e6) * F.log(F.col("c") / F.sum("c").over(everything))
     ).cast("bigint")
-    from ..session import maybe_broadcast
-
     lm = counts.select("token", logp_q.alias("_logp_q"))
-    return tok.join(maybe_broadcast(lm), "token").groupBy(id_col).agg(
+    return tok.join(lm, "token").groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_tokens"),
         (-F.sum("_logp_q")).alias("nll_q_sum"),
         (-F.sum("_logp_q") / F.count(F.lit(1))).alias("avg_nll_q"),
@@ -320,12 +310,12 @@ def token_pair_cooccurrence(
     A-priori pruning is the scale lever: items below ``min_item_df``
     cannot be part of a frequent pair (downward closure), so they are
     dropped BEFORE any pair is generated — the frequent-item table is the
-    one data-dependent broadcast (budget-guarded; NOTE the guard's count
-    probe is eager, so constructing this DataFrame runs a small Spark
-    job). Pairs are then generated IN-ROW per basket from the sorted
-    frequent-item set (``item_a < item_b`` by construction, no self-join
-    of the (doc, token) table — the oracle replays that textbook
-    formulation instead), and the census is one map-side-combined
+    one data-dependent broadcast (budget-guarded on the vocab count, which
+    a small Spark job computes while this DataFrame is built). Pairs are
+    then generated IN-ROW per basket from the sorted frequent-item set
+    (``item_a < item_b`` by construction, no self-join of the (doc, token)
+    table — the oracle replays that textbook formulation instead), and
+    the census is one map-side-combined
     aggregate keyed on the pair. Per-basket work is O(f²) in the basket's
     FREQUENT-item count — bounded by pruning, and at 100 TB the classic
     fix for a still-too-wide basket is raising ``min_item_df``, not a
@@ -437,9 +427,9 @@ def bigram_nll(
     ONCE as a lambda variable — the span_gram_digests O(L^2) re-split
     trap); one (w1, w2) partial-agg shuffle builds the LM; ``c1`` is a
     window PARTITIONED BY w1 over the LM table itself (shuffle ∝ bigram
-    vocab, never a second corpus pass); the probe join is budget-guarded
-    broadcast, and corpus rows re-shuffle only as (id, int-sum) pairs.
-    The eager-count note on :func:`unigram_nll` applies here too.
+    vocab, never a second corpus pass); the planner sizes the probe
+    join's LM side as in :func:`unigram_nll`, and corpus rows re-shuffle
+    only as (id, int-sum) pairs.
     """
     toks = tokens(F.col(text_col))
     pair_t = "array<struct<w1:string,w2:string>>"
@@ -470,10 +460,8 @@ def bigram_nll(
     logp_q = F.floor(
         F.lit(1e6) * F.log(F.col("_c") / F.sum("_c").over(per_w1))
     ).cast("bigint")
-    from ..session import maybe_broadcast
-
     lm = counts.select("w1", "w2", logp_q.alias("_logp_q"))
-    return bg.join(maybe_broadcast(lm), ["w1", "w2"]).groupBy(id_col).agg(
+    return bg.join(lm, ["w1", "w2"]).groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         (-F.sum("_logp_q")).alias("nll_q_sum"),
         (-F.sum("_logp_q") / F.count(F.lit(1))).alias("avg_nll_q"),
@@ -532,8 +520,6 @@ def heavy_hitters(
 
     import pandas as pd
 
-    from ..session import maybe_broadcast
-
     if not 0 < phi < 1:
         raise ValueError(f"phi must be in (0, 1): {phi}")
     from fractions import Fraction
@@ -559,7 +545,7 @@ def heavy_hitters(
     cands = tok.mapInPandas(_mg, "token string").distinct()
     total = tok.agg(F.count(F.lit(1)).alias("_n"))
     counts = (
-        tok.join(maybe_broadcast(cands), "token", "left_semi")
+        tok.join(cands, "token", "left_semi")
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
     )
@@ -819,10 +805,8 @@ def source_vocab_overlap(
         .groupBy("source_a", "source_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    from ..session import maybe_broadcast
-
-    sa = maybe_broadcast(sizes.select(F.col("_g").alias("source_a"), F.col("_v").alias("vocab_a")))
-    sb = maybe_broadcast(sizes.select(F.col("_g").alias("source_b"), F.col("_v").alias("vocab_b")))
+    sa = sizes.select(F.col("_g").alias("source_a"), F.col("_v").alias("vocab_a"))
+    sb = sizes.select(F.col("_g").alias("source_b"), F.col("_v").alias("vocab_b"))
     return (
         inter.join(sa, "source_a")
         .join(sb, "source_b")
@@ -982,7 +966,7 @@ def vocab_growth_curve(
     list (each token lands in at most n_checkpoints buckets). Corpus
     text is read once; the range-partitioned per-doc table is cached so
     the offsets job and the rank pass see one partitioning."""
-    from ..session import maybe_broadcast, tracked_cache
+    from ..session import tracked_cache
 
     tok = docs.select(
         F.col(id_col).alias("_doc"),
@@ -1014,7 +998,7 @@ def vocab_growth_curve(
     total = pc.agg(F.sum("_pc").cast("bigint").alias("_n"))
     rank_w = Window.partitionBy("_pid").orderBy("_doc")
     ranked = (
-        staged.join(maybe_broadcast(offsets), "_pid")
+        staged.join(offsets, "_pid")
         .withColumn(
             "_rank",
             (F.row_number().over(rank_w) + F.col("_off")).cast("bigint"),
@@ -1053,8 +1037,7 @@ def vocab_growth_curve(
     first_doc = tok.groupBy("token").agg(F.min("_doc").alias("_fdoc"))
     cv = (
         first_doc.join(
-            maybe_broadcast(cum.select("bucket", "last_doc")),
-            F.col("_fdoc") <= F.col("last_doc"),
+            cum.select("bucket", "last_doc"), F.col("_fdoc") <= F.col("last_doc")
         )
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cum_vocab"))
@@ -1112,7 +1095,6 @@ def dsir_importance(
     of the ``n_buckets``-row weight table — corpus text never shuffles.
     """
     from ..functions.text import fingerprint
-    from ..session import maybe_broadcast
 
     toks = tokens(F.col(text_col))
     empty = F.array().cast("array<string>")
@@ -1165,7 +1147,7 @@ def dsir_importance(
     ).cast("bigint")
     weights = census.select("b", (lp_q - lq_q).alias("_w_q"))
     return (
-        occ.join(maybe_broadcast(weights), "b")
+        occ.join(weights, "b")
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),

@@ -2600,10 +2600,10 @@ def q_token_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     document-basket with both document frequencies and lift. Thresholds
     derive from the basket count as exact binary fractions (item df ≥
     ⌈N/16⌉, pair support ≥ ⌈N/4⌉) so the census stays discriminative at
-    every SF; the doc count is an eager scan-count (documented, like the
-    broadcast guard's probe). Pairs are generated IN-ROW from each
-    basket's sorted frequent-item set (no (doc, token) self-join — the
-    oracle replays that textbook formulation); lift is one IEEE
+    every SF; the doc count is an eager scan-count (documented). Pairs
+    are generated IN-ROW from each basket's sorted frequent-item set (no
+    (doc, token) self-join — the oracle replays that textbook
+    formulation); lift is one IEEE
     multiply/divide tree on exact integer counts, mirrored verbatim —
     bit-exact, no grid."""
     import math
@@ -3112,7 +3112,7 @@ def q_decontaminate_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary any-overlap rule. Same synthetic split as the sibling
     (benchmark = the doc_id % 97 == 0 slice, n=3); denominator counts
     in-row (distinct shingles never leave the scan), numerator rides the
-    budget-guarded broadcast gram probe, matched counts broadcast back —
+    broadcast gram probe, matched counts broadcast back —
     corpus rows never shuffle. The oracle replays it on gram strings;
     the Spark side probes xxhash64(gram) and must agree hash-exactly."""
     from ..operators.decontam import containment_scores

@@ -26,7 +26,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..session import maybe_broadcast
 from ..sources.readers import load_table
 from .registry import register
 
@@ -1229,15 +1228,12 @@ def q_shipping_priority_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     FACT-DERIVED — the date filter keeps ~97% of BUILDING-segment
     orders, a side that grows linearly with the warehouse — so it must
     NOT carry an unconditional broadcast hint (at 100 TB that is a
-    multi-GB forced broadcast, the textbook driver-OOM). It routes
-    through `maybe_broadcast` instead: within the row budget the hint
-    is attached (and the pinned 2-BHJ/1-exchange/TakeOrdered shape
-    holds at every test SF); past the budget the edge degrades to a
-    co-keyed shuffle join, exactly like Q5's unhinted lineitem-orders
-    edge (`q_local_supplier_volume`). The budget probe is EAGER
-    (one count job at plan-construction time, `cache=False` because the
-    side is a cheap scan+broadcast-join that is cheaper to recompute
-    than to retain)."""
+    multi-GB forced broadcast, the textbook driver-OOM). It carries no
+    hint at all: the planner broadcasts it while its estimated (or, under
+    AQE, observed) size is under `autoBroadcastJoinThreshold` (the pinned
+    2-BHJ/1-exchange/TakeOrdered shape at the test SFs); past it the edge
+    is a co-keyed shuffle join, exactly like Q5's unhinted
+    lineitem-orders edge (`q_local_supplier_volume`)."""
     customer = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
@@ -1249,12 +1245,9 @@ def q_shipping_priority_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = lineitem.filter(
         F.col("l_shipdate") > F.lit("1998-01-01").cast(sd)
     )
-    building_orders = maybe_broadcast(
-        orders.join(
-            F.broadcast(customer),
-            orders.o_custkey == customer.c_custkey,
-        ),
-        cache=False,
+    building_orders = orders.join(
+        F.broadcast(customer),
+        orders.o_custkey == customer.c_custkey,
     )
     return (
         lineitem.join(

@@ -12,7 +12,7 @@ from __future__ import annotations
 import os
 import zipfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 DEFAULT_APP_NAME = "the-movie-database-import-spark"
 
@@ -72,55 +72,27 @@ BROADCAST_BUDGET_ROWS = 8_000_000
 # short string token (offsets + bytes + row overhead).
 BROADCAST_BUDGET_ARRAY_ELEMS = 16_000_000
 
+# Row budget for the driver-side fast paths (connected components'
+# union-find, the BPE trainer's local merge loop): one scan-task's worth of
+# rows (the engine's ~64k rows/task sizing). Under it, collecting the input
+# and looping on the driver beats one distributed round-trip per step; far
+# over it, the Python pass would dwarf the job latency it saves. Operators
+# read it at call time, so a test can force the distributed branch.
+DRIVER_BUDGET_ROWS = 65536
 
-def maybe_broadcast(df: DataFrame, *, budget_rows: int = BROADCAST_BUDGET_ROWS,
-                    n_rows: int | None = None, cache: bool = True) -> DataFrame:
-    """Budget-guarded broadcast hint (VERDICT r06 #3): return
-    ``F.broadcast(df)`` when the side is verifiably within budget, else
-    ``df`` unhinted so the join plans as a shuffle join (identical
-    semantics; AQE handles skew, and its runtime
-    ``autoBroadcastJoinThreshold`` can still promote the join if the side
-    turns out small). Every data-dependent broadcast site in the engine
-    routes through this instead of assuming "delta/eval-set ≪ corpus"
-    holds forever.
 
-    When ``n_rows`` is known from pipeline metadata, pass it — zero extra
-    work. Otherwise the side is ``tracked_cache``'d and counted: one extra
-    job whose work the subsequent join re-reads from cache, so a side
-    computed by an expensive aggregate is NOT computed twice (the corpus
-    scan count stays what it was; only K cached rows are retained, and
-    the registry/bench release discipline frees them at the next query).
-    ``cache=False`` skips the cache for sides that are pure scans
-    (recompute is cheaper than retention).
-
-    NOTE the count probe is EAGER: without ``n_rows``, calling this runs a
-    Spark job at DataFrame-CONSTRUCTION time, so operators that route a
-    side through the guard (decontaminate, oov_rate, unigram_nll,
-    apply_delta's default victims, attach_surrogate_ids,
-    fuzzy_pairs_edit1) trigger jobs when built, not only when their result
-    executes — each such caller documents this. On the OVER-budget path
-    the probe cache is released immediately (ADVICE r07): a side that
-    failed the budget is by definition large, and retaining a corpus-sized
-    cache until the next release_caches() is exactly the resource pressure
-    the guard exists to avoid; the fallback shuffle join recomputes the
-    side once from lineage instead."""
-    from pyspark.sql import functions as F
-
-    cached_here = False
-    if n_rows is None:
-        if cache:
-            df = tracked_cache(df)
-            cached_here = True
-        n_rows = df.count()
-    if n_rows <= budget_rows:
-        return F.broadcast(df)
-    if cached_here:
-        try:
-            df.unpersist(blocking=False)
-            _TRACKED_CACHES.remove(df)
-        except Exception:  # already released / session stopped
-            pass
-    return df
+def maybe_broadcast(df: DataFrame, *, n_rows: int,
+                    budget_rows: int = BROADCAST_BUDGET_ROWS) -> DataFrame:
+    """Budget-guarded broadcast hint (VERDICT r06 #3) for a side whose size
+    the caller already knows (``n_rows``, or a provable upper bound, from
+    pipeline metadata): ``F.broadcast(df)`` within budget, else ``df``
+    unhinted so the join plans as a shuffle join (identical semantics; AQE
+    handles skew, and its runtime ``autoBroadcastJoinThreshold`` can still
+    promote the join if the side turns out small). The decision starts no
+    Spark job. A side of unknown size is joined plainly instead: the static
+    planner broadcasts it when Catalyst's size estimate is under the
+    threshold, and AQE when the observed shuffle size is."""
+    return F.broadcast(df) if n_rows <= budget_rows else df
 
 
 def release_caches() -> int:

@@ -17,6 +17,13 @@ Exit code 1 if any query fails. This is the pre-ship gate VERDICT r01 #3
 asked for: rounding-boundary or dtype flips can never reach the driver
 first again.
 
+DuckDB runs in-process under a 3 GB memory limit and spills to a
+per-process directory under ``$SPARK_LOCAL_DIRS`` (first entry) or the
+system temp dir: its default limit is 80% of RAM, and at sf0.1 the
+`q_graph_triangles` oracle (a plain three-way join) grew past 12 GB under
+it on a 16 GB host, beside the Spark JVM, until the OOM killer stopped the
+sweep.
+
 SPARK_GRAFT_VANILLA=1 runs the sweep on a VANILLA SparkSession (none of
 the engine's tuned confs — exactly the session the external driver
 brings) and ALSO executes the no-oracle queries as rows-only checks, so
@@ -28,6 +35,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 # Runnable from anywhere: `python tools/exact_parity.py` puts tools/ (not the
 # repo root) on sys.path, which silently breaks the package import.
@@ -100,7 +108,13 @@ def main() -> int:
 
         spark = get_spark("exact-parity")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
+    spill_root = os.environ.get("SPARK_LOCAL_DIRS", "").split(",")[0]
+    con = duckdb.connect(config={
+        "memory_limit": "3GB",
+        "temp_directory": os.path.join(
+            spill_root or tempfile.gettempdir(), f"exact-parity-duckdb-{os.getpid()}"
+        ),
+    })
     for t in TESTDATA_TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
 
