@@ -54,6 +54,17 @@ RECHECK = (
     "q_text_tfidf_cosine_pairs",
     "q_text_unigram_nll",
     "q_vocab_growth",
+    # iterative operators free checkpoints through their DataFrame handle
+    # (session.retire), not an RDD id: every query that reaches PageRank,
+    # connected components or BPE (q_dedup_savings_minhash,
+    # q_entity_resolution and q_pipeline_end_to_end are listed above)
+    "q_bpe_encode",
+    "q_bpe_train",
+    "q_dedup_clusters",
+    "q_dedup_savings",
+    "q_dedup_survivors",
+    "q_graph_pagerank",
+    "q_split_leakage_safe",
 )
 
 

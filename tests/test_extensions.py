@@ -4032,27 +4032,85 @@ def test_bpe_encode_matches_python_model(spark):
 
 def test_iterative_operators_leave_no_pinned_rdds(spark, monkeypatch):
     """localCheckpoint blocks live in the executor block store, not the SQL
-    cache — release_caches cannot reclaim them, so the iterative operators
-    must retire their own snapshots (the r13 ext-bench interference
-    finding). After connected_components and train_bpe complete, at most
-    the operator's single RESULT checkpoint may remain pinned."""
+    cache — release_caches only reclaims the handles it tracks, so the
+    iterative operators must retire their own snapshots (the r13 ext-bench
+    interference finding). After connected_components and train_bpe
+    complete, at most the operator's single RESULT checkpoint may remain
+    pinned; every path, early returns and driver fast paths included,
+    leaves no pin once release_caches() has run. retire() frees a
+    checkpoint and refuses a view of one."""
     from the_movie_database_import_spark import session
-    from the_movie_database_import_spark.operators.bpe import train_bpe
+    from the_movie_database_import_spark.operators.bpe import (
+        bpe_encode_counts,
+        train_bpe,
+    )
     from the_movie_database_import_spark.operators.dedup import (
         connected_components,
     )
-    from the_movie_database_import_spark.session import persistent_rdd_ids
+    from the_movie_database_import_spark.operators.graph import pagerank
+    from the_movie_database_import_spark.session import (
+        persistent_rdd_ids,
+        release_caches,
+        retire,
+    )
 
-    # exercise the DISTRIBUTED loop's retirement discipline (the driver
-    # fast path would skip the per-round checkpoints on this small graph)
-    monkeypatch.setattr(session, "DRIVER_BUDGET_ROWS", 0)
     sc = spark.sparkContext
+    docs = _docs(spark)
+
+    def assert_released(case):
+        release_caches()
+        leftover = persistent_rdd_ids(sc) - before
+        assert not leftover, f"{case}: pins survived release: {leftover}"
+
+    release_caches()
     before = persistent_rdd_ids(sc)
 
+    # default budget: the driver fast paths and pagerank's empty-graph
+    # early return
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "doc_a long, doc_b long"
     )
     nodes = spark.createDataFrame([(i,) for i in range(41)], "id long")
+    stats = {}
+    connected_components(nodes, edges, node_col="id", stats=stats).count()
+    assert stats["rounds"] == 0, stats  # the union-find fast path ran
+    assert_released("connected_components driver path")
+
+    train_bpe(docs, n_merges=5).count()
+    assert_released("train_bpe driver path")
+
+    no_edges = spark.createDataFrame([], "src long, dst long, weight long")
+    assert pagerank(no_edges, iters=3).count() == 0
+    assert_released("pagerank on an empty edge set")
+
+    merges = [
+        (r.left, r.right, r.merged)
+        for r in train_bpe(docs, n_merges=5).orderBy("merge_rank").collect()
+    ]
+    assert len(merges) > 2
+    bpe_encode_counts(docs, merges, checkpoint_every=2).count()
+    assert_released("bpe_encode_counts chain checkpoints")
+
+    # round-1 contraction finish: the node count fits the driver budget,
+    # the edge count does not (two 10-cliques: 20 nodes, 90 edges)
+    monkeypatch.setattr(session, "DRIVER_BUDGET_ROWS", 30)
+    cliques = spark.createDataFrame(
+        [(b + i, b + j) for b in (0, 10) for i in range(10) for j in range(i + 1, 10)],
+        "doc_a long, doc_b long",
+    )
+    twenty = spark.createDataFrame([(i,) for i in range(20)], "id long")
+    stats = {}
+    got = connected_components(twenty, cliques, node_col="id", stats=stats)
+    assert {r.doc_id: r.cluster_rep for r in got.collect()} == {
+        i: i - i % 10 for i in range(20)
+    }
+    assert stats["rounds"] == 1, stats  # finished after one round
+    assert_released("connected_components contraction finish")
+
+    # exercise the DISTRIBUTED loop's retirement discipline (the driver
+    # fast path would skip the per-round checkpoints on this small graph)
+    monkeypatch.setattr(session, "DRIVER_BUDGET_ROWS", 0)
+
     labels = connected_components(nodes, edges, node_col="id")
     labels.count()
     after_cc = persistent_rdd_ids(sc) - before
@@ -4061,7 +4119,6 @@ def test_iterative_operators_leave_no_pinned_rdds(spark, monkeypatch):
     # the zero driver budget sends the trainer down its DISTRIBUTED path
     # too (ADVICE r13: every fixture census fits the driver budget, so
     # unpatched this covered only the fast path's absence of checkpoints)
-    docs = _docs(spark)
     train_bpe(docs, n_merges=5).count()
     after_bpe = persistent_rdd_ids(sc) - before - after_cc
     assert not after_bpe, f"train_bpe leaked pins: {after_bpe}"
@@ -4069,8 +4126,6 @@ def test_iterative_operators_leave_no_pinned_rdds(spark, monkeypatch):
     # pagerank: the weighted-edge and node-universe scaffolding checkpoints
     # must retire at function exit (r13: ew alone pinned ~240 MB per call
     # for the session's lifetime); only the result checkpoint may remain.
-    from the_movie_database_import_spark.operators.graph import pagerank
-
     pr_edges = spark.createDataFrame(
         [(i, (i + 1) % 40, 1) for i in range(40)],
         "src long, dst long, weight long",
@@ -4080,12 +4135,18 @@ def test_iterative_operators_leave_no_pinned_rdds(spark, monkeypatch):
     assert len(after_pr) <= 1, f"pagerank leaked pins: {after_pr}"
 
     # and the RESULT checkpoints themselves are reclaimed at the next
-    # query boundary via the tracked result-checkpoint registry
-    from the_movie_database_import_spark.session import release_caches
+    # query boundary, as tracked handles
+    assert_released("distributed loops")
 
-    release_caches()
-    leftover = persistent_rdd_ids(sc) - before
-    assert not leftover, f"result checkpoints survived release: {leftover}"
+    # retire frees a checkpoint through its handle and refuses a view of
+    # one, which would otherwise leak the checkpoint it reads
+    ckpt = spark.range(10).localCheckpoint()
+    pinned = persistent_rdd_ids(sc) - before
+    assert pinned
+    with pytest.raises(ValueError):
+        retire(ckpt.coalesce(1))
+    retire(ckpt)
+    assert not persistent_rdd_ids(sc) & pinned
 
 
 def test_setjoin_prefix_hand_case(spark):

@@ -70,11 +70,12 @@ def test_tracked_caches_released_on_next_query(spark):
     previous query's tracked caches, and release_caches() empties the
     engine's registry entirely (VERDICT r01 #8).
 
-    Asserts on the ENGINE's own ``_TRACKED_CACHES`` handles and their
-    ``storageLevel`` — never on a JVM-wide ``getPersistentRDDs()`` count,
-    which races foreign async unpersists (MLlib KMeans internals,
-    ContextCleaner-driven localCheckpoint frees) in a shared test session
-    and made this test flaky under host load (VERDICT r05 #1)."""
+    Asserts on the ENGINE's own tracked handles (``_TRACKED``, which
+    holds caches and result checkpoints alike) and their ``storageLevel``
+    — never on a JVM-wide ``getPersistentRDDs()`` count, which races
+    foreign async unpersists (MLlib KMeans internals, ContextCleaner-driven
+    localCheckpoint frees) in a shared test session and made this test
+    flaky under host load (VERDICT r05 #1)."""
     from the_movie_database_import_spark import session as eng_session
 
     def _is_cached(df) -> bool:
@@ -82,16 +83,16 @@ def test_tracked_caches_released_on_next_query(spark):
         return lvl.useMemory or lvl.useDisk
 
     eng_session.release_caches()
-    assert eng_session._TRACKED_CACHES == [], "registry must start empty"
+    assert eng_session._TRACKED == [], "registry must start empty"
 
     REGISTRY["q_dedup_minhash_lsh"].spark_fn(spark, SF_DIR).count()
-    held = list(eng_session._TRACKED_CACHES)
+    held = list(eng_session._TRACKED)
     assert held, "minhash should register tracked caches"
     assert all(_is_cached(df) for df in held), "tracked frames must be cached"
 
     # next query's invocation releases the minhash caches before running
     REGISTRY["q_filter_pred"].spark_fn(spark, SF_DIR).count()
-    assert eng_session._TRACKED_CACHES == [], "previous caches must be freed"
+    assert eng_session._TRACKED == [], "previous caches must be freed"
     # release_caches() is blocking=True, so the handles we captured are
     # uncached the moment the registry wrapper returns — no settle-wait.
     assert not any(_is_cached(df) for df in held), (
@@ -482,7 +483,7 @@ def test_pipeline_checkpoints_retire(spark):
     INLINE — its blocks feed exactly the two span-stage reads, both inside
     the spans materialization — so after the build only the spans RESULT
     checkpoint may stay pinned, and release_caches() (the next registry-
-    query boundary) reclaims that one via the tracked-result registry."""
+    query boundary) reclaims that one as a tracked handle."""
     from the_movie_database_import_spark import session as S
 
     sc = spark.sparkContext
@@ -490,8 +491,10 @@ def test_pipeline_checkpoints_retire(spark):
     before = S.persistent_rdd_ids(sc)
     df = REGISTRY["q_pipeline_end_to_end"].spark_fn(spark, SF_DIR)
     # exactly ONE result checkpoint registered (spans) — dd was retired
-    # inline during the build, not deferred to the registry
-    assert len(S._TRACKED_RESULT_CHECKPOINTS) == 1, S._TRACKED_RESULT_CHECKPOINTS
+    # inline during the build, not deferred to the registry; the other
+    # tracked handles are SQL caches
+    ckpts = [h for h in S._TRACKED if S._checkpoint_rdd(h) is not None]
+    assert len(ckpts) == 1, ckpts
     df.write.format("noop").mode("overwrite").save()
     S.release_caches()
     leftover = S.persistent_rdd_ids(sc) - before
@@ -890,13 +893,13 @@ def test_maybe_broadcast_budget_guard_both_paths(spark):
         big = spark.range(5000).withColumnRenamed("id", "k")
         small = spark.range(0, 5000, 7).withColumnRenamed("id", "k")
 
-        caches, jobs = len(S._TRACKED_CACHES), job_ids(spark)
+        caches, jobs = len(S._TRACKED), job_ids(spark)
         hinted = big.join(S.maybe_broadcast(small, n_rows=715), "k", "left_anti")
         fallback = big.join(
             S.maybe_broadcast(small, n_rows=715, budget_rows=10), "k", "left_anti"
         )
         assert job_ids(spark) == jobs
-        assert len(S._TRACKED_CACHES) == caches
+        assert len(S._TRACKED) == caches
 
         p1 = hinted._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in p1, p1

@@ -124,22 +124,18 @@ def train_bpe(
 
     Job shape: the per-round checkpoint is LAZY (``eager=False``) so the
     NEXT round's argmax job materializes it — one job per round instead of
-    two. Checkpoint blocks are freed explicitly as rounds retire (each
-    tracked by its EXACT LogicalRDD id, session.local_checkpoint_rdd_id)
-    and ALL of them at return — the merge table is driver data, so nothing
-    downstream reads the vocab chain. Without this, a shared session
+    two. Each round's checkpoint is retired through its own DataFrame
+    handle (``session.retire``) once the next round's argmax has
+    materialized its successor, and ALL of them at return — the merge
+    table is driver data, so nothing downstream reads the vocab chain.
+    Without this, a shared session
     accumulates n_merges vocab snapshots per call in the executor block
     store (the r13 ext-bench interference finding)."""
     from pyspark.sql import Observation
 
-    from ..session import (
-        DRIVER_BUDGET_ROWS,
-        local_checkpoint_rdd_id,
-        unpersist_rdd_ids,
-    )
+    from ..session import DRIVER_BUDGET_ROWS, retire, sized_partitions
 
     spark = docs.sparkSession
-    sc = spark.sparkContext
     # Size-derived loop partitioning (r13 opt, guide §2.6): localCheckpoint
     # pins the PRE-AQE partitioning, so a Heaps-bounded census (31 rows on
     # the bench corpus) would otherwise drag shuffle-partition-many
@@ -154,7 +150,6 @@ def train_bpe(
         .observe(obs, F.count(F.lit(1)).alias("n_words"))
         .localCheckpoint()
     )
-    prev_id = local_checkpoint_rdd_id(vocab)
     n_words = int(obs.get["n_words"] or 0)
     schema = (
         "merge_rank bigint, left string, right string, merged string, "
@@ -176,17 +171,17 @@ def train_bpe(
                 (list(r["syms"]), int(r["wcount"])) for r in vocab.collect()
             ]
         finally:
-            if prev_id is not None:
-                unpersist_rdd_ids(sc, {prev_id})
+            retire(vocab)
         return spark.createDataFrame(
             spark.sparkContext.parallelize(
                 _train_bpe_local(data, int(n_merges), int(min_count)), 1
             ),
             schema,
         )
-    vocab = vocab.coalesce(
-        max(1, min(sc.defaultParallelism, n_words // 65536 + 1))
-    )
+    # the chain's checkpoints still pinned, oldest first; the loop reads
+    # the newest (through a coalesce view in round 1)
+    live = [vocab]
+    vocab = vocab.coalesce(sized_partitions(spark.sparkContext, n_words))
     merges: list[tuple[int, str, str, str, int]] = []
     try:
         for rank in range(1, int(n_merges) + 1):
@@ -200,16 +195,10 @@ def train_bpe(
                 .limit(1)
                 .collect()
             )
-            # the argmax job just materialized this round's lazy
-            # checkpoint; the previous round's snapshot is now unreachable.
-            # cur_id is None in round 1 (vocab is the COALESCE VIEW of the
-            # initial checkpoint, not a LogicalRDD) — the initial snapshot
-            # is still live then, so only retire when a real new id shows.
-            cur_id = local_checkpoint_rdd_id(vocab)
-            if cur_id is not None:
-                if prev_id is not None and prev_id != cur_id:
-                    unpersist_rdd_ids(sc, {prev_id})
-                prev_id = cur_id
+            # the argmax job just materialized the newest checkpoint; the
+            # one before it is now unreachable.
+            retire(*live[:-1])
+            del live[:-1]
             if not best or best[0].pair_count < min_count:
                 break
             left, right = best[0].left, best[0].right
@@ -220,10 +209,9 @@ def train_bpe(
                 "wcount",
                 _apply_merge(F.col("syms"), left, right, merged).alias("syms"),
             ).localCheckpoint(eager=False)
+            live.append(vocab)
     finally:
-        for rid in {prev_id, local_checkpoint_rdd_id(vocab)}:
-            if rid is not None:
-                unpersist_rdd_ids(sc, {rid})
+        retire(*live)
     # One explicit slice (r13 opt, guide §4): createDataFrame on driver
     # rows parallelizes into defaultParallelism pickled partitions, each
     # deserialized by its OWN Python worker — 32 worker spin-ups (~0.3 s
@@ -288,12 +276,7 @@ def bpe_encode_counts(
     corpus through the budget-guarded broadcast. The merge chain
     checkpoints every ``checkpoint_every`` rounds so expression depth stays
     bounded instead of nesting n_merges fold lambdas into one tree."""
-    from ..session import (
-        local_checkpoint_rdd_id,
-        maybe_broadcast,
-        tracked_cache,
-        unpersist_rdd_ids,
-    )
+    from ..session import maybe_broadcast, retire, sized_partitions, tracked_cache
 
     from pyspark.sql import Observation
 
@@ -305,28 +288,25 @@ def bpe_encode_counts(
     # census, its row count rides that job via Observation, and the whole
     # chain inherits the coalesced layout.
     obs = Observation()
-    vocab = (
+    # ckpt: the newest chain checkpoint; vocab reads it
+    ckpt = (
         word_census(docs, text_col)
         .select("word", _chars(F.col("word")).alias("syms"))
         .observe(obs, F.count(F.lit(1)).alias("n_words"))
         .localCheckpoint()
     )
-    prev_id: int | None = local_checkpoint_rdd_id(vocab)
     n_words = int(obs.get["n_words"] or 0)
-    vocab = vocab.coalesce(
-        max(1, min(sc.defaultParallelism, n_words // 65536 + 1))
-    )
+    vocab = ckpt.coalesce(sized_partitions(sc, n_words))
     for i, (left, right, merged) in enumerate(merges):
         vocab = vocab.select(
             "word", _apply_merge(F.col("syms"), left, right, merged).alias("syms")
         )
         if (i + 1) % int(checkpoint_every) == 0 and i + 1 < len(merges):
             vocab = vocab.localCheckpoint()
-            # retire the previous chain checkpoint (exact-id tracked) —
-            # only the newest one feeds the rest of the plan
-            if prev_id is not None:
-                unpersist_rdd_ids(sc, {prev_id})
-            prev_id = local_checkpoint_rdd_id(vocab)
+            # retire the previous chain checkpoint — only the newest one
+            # feeds the rest of the plan
+            retire(ckpt)
+            ckpt = vocab
     word_counts = vocab.select(
         "word", F.size("syms").cast("bigint").alias("_wtoks")
     )
@@ -338,8 +318,7 @@ def bpe_encode_counts(
     # truncates lineage).
     word_counts = tracked_cache(word_counts)
     n_vocab = word_counts.count()
-    if prev_id is not None:
-        unpersist_rdd_ids(sc, {prev_id})
+    retire(ckpt)
     word_counts = maybe_broadcast(word_counts, n_rows=n_vocab)
     exploded = docs.select(
         F.col(id_col).alias("doc_id"),

@@ -620,20 +620,23 @@ def connected_components(
     full job over the labels table — at 100 TB that doubles the number of
     jobs for a scalar the iteration already knows.
 
-    Lifetime contract (ADVICE r13): when the distributed loop runs, the
-    returned frame reads a localCheckpoint registered for retirement at the
-    next registry-query boundary (``session.release_caches``). Consume it
-    before that boundary; re-executing it later fails fast (freed blocks
-    cannot be recomputed from truncated lineage).
+    Lifetime contract (ADVICE r13): every checkpoint is retired here through
+    its own DataFrame handle (``session.retire``), except, when the
+    distributed loop runs, the final labels checkpoint the returned frame
+    reads: that handle goes to ``session.track_result_checkpoint`` and is
+    retired at the next registry-query boundary
+    (``session.release_caches``). Consume the result before that boundary;
+    re-executing it later fails fast (freed blocks cannot be recomputed
+    from truncated lineage).
     """
     from pyspark.sql import Observation
 
     from ..session import (
         DRIVER_BUDGET_ROWS,
-        local_checkpoint_rdd_id,
         maybe_broadcast,
+        retire,
+        sized_partitions,
         track_result_checkpoint,
-        unpersist_rdd_ids,
     )
 
     sc = nodes.sparkSession.sparkContext
@@ -662,25 +665,23 @@ def connected_components(
         .observe(obs_edges, F.count(F.lit(1)).alias("n_edges"))
         .localCheckpoint()
     )
-    _edges_id = local_checkpoint_rdd_id(ek)
     n_edges = int(obs_edges.get["n_edges"] or 0)
-    # Size-derived view of the edge blocks for the per-round scans (~64k
-    # rows per task, capped at cluster parallelism): a small pair list
-    # otherwise pays 2x defaultParallelism near-empty tasks per round.
-    eparts = max(1, min(sc.defaultParallelism, n_edges // 65536 + 1))
-    ekv = ek.coalesce(eparts)
+    # Size-derived view of the edge blocks for the per-round scans: a small
+    # pair list otherwise pays 2x defaultParallelism near-empty tasks per
+    # round.
+    ekv = ek.coalesce(sized_partitions(sc, n_edges))
     undirected = ekv.unionByName(
         ekv.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
     obs_nodes = Observation()
-    labels = (
+    # ckpt: the labels checkpoint the loop reads; labels may be a view of it
+    labels = ckpt = (
         nodes.select(F.col(node_col).alias("u"))
         .distinct()
         .withColumn("label", F.col("u"))
         .observe(obs_nodes, F.count(F.lit(1)).alias("n_nodes"))
         .localCheckpoint()
     )
-    _prev_labels_id = local_checkpoint_rdd_id(labels)
     # Label/neighbor-min/pointer tables are all ≤ n rows: within the
     # broadcast budget every per-round join plans as a BroadcastHashJoin
     # and the edge table is NEVER shuffled in a round (the checkpointed
@@ -709,16 +710,14 @@ def connected_components(
         out = [(u, final[u], u == final[u]) for u in sorted(final)]
         if stats is not None:
             stats["rounds"] = 0
-        for rid in (_edges_id, _prev_labels_id):
-            if rid is not None:
-                unpersist_rdd_ids(sc, {rid})
+        retire(ek, ckpt)
         id_type = dict(labels.dtypes)["u"]
         return nodes.sparkSession.createDataFrame(
             sc.parallelize(out, 1),
             f"doc_id {id_type}, cluster_rep {id_type}, is_kept boolean",
         )
-    nparts = max(1, min(sc.defaultParallelism, n // 65536 + 1))
-    labels = labels.coalesce(nparts)
+    nparts = sized_partitions(sc, n)
+    labels = ckpt.coalesce(nparts)
     rounds = 0
     for _ in range(max_iters):
         if rounds == 1 and n <= DRIVER_BUDGET_ROWS:
@@ -769,9 +768,7 @@ def connected_components(
                 ]
                 if stats is not None:
                     stats["rounds"] = rounds
-                for rid in (_edges_id, _prev_labels_id):
-                    if rid is not None:
-                        unpersist_rdd_ids(sc, {rid})
+                retire(ek, ckpt)
                 id_type = dict(labels.dtypes)["u"]
                 return nodes.sparkSession.createDataFrame(
                     sc.parallelize(out, 1),
@@ -829,30 +826,23 @@ def connected_components(
             .coalesce(nparts)  # size-derived: labels are n rows, not 32 blocks
             .localCheckpoint()  # eager: one job materializes AND measures
         )
-        labels = new_labels
         rounds += 1
-        # Retire the PREVIOUS round's labels snapshot (tracked by its
-        # EXACT LogicalRDD id — see session.local_checkpoint_rdd_id):
-        # this round's checkpoint holds everything further rounds read.
-        # Without this, a k-round fixpoint leaves k+2 pinned RDDs per
-        # query in the block store — invisible to release_caches (RDD
-        # pins, not SQL cache entries), accumulating across a registry
-        # sweep (the r13 ext-bench interference finding, same class as
-        # the BPE checkpoint leak).
-        _new_labels_id = local_checkpoint_rdd_id(labels)
-        if _prev_labels_id is not None and _prev_labels_id != _new_labels_id:
-            unpersist_rdd_ids(sc, {_prev_labels_id})
-        _prev_labels_id = _new_labels_id
+        # Retire the PREVIOUS round's labels checkpoint: this round's holds
+        # everything further rounds read. Without this, a k-round fixpoint
+        # leaves k+2 pinned RDDs per query in the block store, accumulating
+        # across a registry sweep (the r13 ext-bench interference finding,
+        # same class as the BPE checkpoint leak).
+        retire(ckpt)
+        labels = ckpt = new_labels
         if not obs.get["n_changed"]:  # None (empty graph) or 0: fixpoint
             break
     if stats is not None:
         stats["rounds"] = rounds
     # the returned labeling reads ONLY the final labels checkpoint — the
     # edge table is dead weight past the fixpoint; the labels checkpoint
-    # itself retires at the next query boundary (tracked result registry)
-    if _edges_id is not None:
-        unpersist_rdd_ids(sc, {_edges_id})
-    track_result_checkpoint(labels)
+    # itself retires at the next query boundary as a tracked handle
+    retire(ek)
+    track_result_checkpoint(ckpt)
     return labels.select(
         F.col("u").alias("doc_id"),
         F.col("label").alias("cluster_rep"),

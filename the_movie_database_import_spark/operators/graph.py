@@ -137,8 +137,9 @@ def pagerank(
     `groupBy(dst)` needs no exchange and the round plan is one fused stage:
     scan edge blocks -> BroadcastHashJoin(ranks, under budget) -> project
     -> aggregate -> checkpoint (2 jobs/round, zero shuffle; the r13 form
-    paid 3 jobs and a full shuffle per round). The new ranks checkpoint and
-    the previous round's blocks retire by exact RDD id. Over the broadcast
+    paid 3 jobs and a full shuffle per round). Once the new ranks checkpoint
+    has materialized, the previous round's checkpoint is retired through its
+    own DataFrame handle (``session.retire``). Over the broadcast
     budget every round falls back to the unhinted shuffle-join plan —
     identical integer results. At cluster scale the checkpoint becomes a
     persisted table per round — same loop body. Nodes with no in-edges keep
@@ -150,17 +151,20 @@ def pagerank(
     Returns (node, pr_scaled BIGINT). pr_scaled/scale sums to ≤1 (flooring
     leaks mass downward deterministically — both engines leak identically).
 
-    Lifetime contract (ADVICE r13): the returned frame reads a
-    localCheckpoint registered for retirement at the next registry-query
-    boundary (``session.release_caches``). Consume it before that boundary;
+    Lifetime contract (ADVICE r13): the returned frame IS the final ranks
+    checkpoint, handed to ``session.track_result_checkpoint`` and retired at
+    the next registry-query boundary (``session.release_caches``); every
+    other checkpoint is retired here. Consume it before that boundary;
     a later re-execution cannot recompute the freed blocks (truncated
     lineage) and fails fast instead of silently re-running the plan.
     """
+    from pyspark.sql import Observation
+
     from ..session import (
-        local_checkpoint_rdd_id,
         maybe_broadcast,
+        retire,
+        sized_partitions,
         track_result_checkpoint,
-        unpersist_rdd_ids,
     )
 
     sc = edges.sparkSession.sparkContext
@@ -186,39 +190,34 @@ def pagerank(
         # branches each re-ran edge generation).
         .localCheckpoint()
     )
-    _e_id = local_checkpoint_rdd_id(e)
 
-    nodes = (
+    # The node count is a bounded driver scalar; it rides the checkpoint's
+    # own materializing job (an Observation, no separate count job), and
+    # folding it into the expressions as a LITERAL replaces the per-round
+    # crossJoin(broadcast(n_df)) — identical integer arithmetic, one fewer
+    # broadcast per round (r13 opt).
+    obs = Observation()
+    node_ckpt = (
         e.select(F.col("_u").alias("node"))
         .union(e.select(F.col("_v").alias("node")))
         .distinct()
+        .observe(obs, F.count(F.lit(1)).alias("n_nodes"))
         .localCheckpoint()
     )
-    _nodes_id = local_checkpoint_rdd_id(nodes)
-    # The node count is a bounded driver scalar (nodes is already
-    # materialized); folding it into the expressions as a LITERAL replaces
-    # the per-round crossJoin(broadcast(n_df)) — identical integer
-    # arithmetic, one fewer broadcast per round (r13 opt).
-    n = nodes.count()
+    n = int(obs.get["n_nodes"] or 0)
     # Size-derived partition count for the n-row node/rank tables (r13 opt):
-    # localCheckpoint materializes the pre-AQE plan, so these checkpoints
-    # otherwise inherit spark.sql.shuffle.partitions blocks each — and every
-    # round re-reads them and rebuilds a broadcast from them, paying ~30
-    # near-empty tasks per table per round. ~64k rows per block, capped at
-    # cluster parallelism, floor 1 — scales up with n, never tuned to the
-    # local core count.
-    nparts = max(1, min(sc.defaultParallelism, n // 65536 + 1))
-    nodes = nodes.coalesce(nparts)
+    # every round re-reads them and rebuilds a broadcast from them, so
+    # shuffle-partition-many blocks would cost ~30 near-empty tasks per
+    # table per round.
+    nparts = sized_partitions(sc, n)
+    nodes = node_ckpt.coalesce(nparts)
     if n == 0:
         # Empty graph: nothing iterates, so the scaffolding checkpoints are
-        # dead right here — retire them before returning (r14, ADVICE r13:
-        # the early return previously left _e_id/_nodes_id pinned forever).
+        # dead right here — retire them before returning.
         empty = nodes.select(
             "node", F.lit(0).cast("bigint").alias("pr_scaled")
         ).localCheckpoint()
-        for rid in (_e_id, _nodes_id):
-            if rid is not None:
-                unpersist_rdd_ids(sc, {rid})
+        retire(e, node_ckpt)
         return track_result_checkpoint(empty)
 
     # Rank/out-weight/contribution tables are all ≤ n rows. When n fits the
@@ -268,9 +267,7 @@ def pagerank(
         )
     finally:
         edges.sparkSession.conf.set("spark.sql.adaptive.enabled", adaptive_was)
-    _ew_id = local_checkpoint_rdd_id(ew)
-    if _e_id is not None:
-        unpersist_rdd_ids(sc, {_e_id})
+    retire(e)
 
     ranks = (
         nodes.select(
@@ -279,12 +276,9 @@ def pagerank(
         .coalesce(nparts)
         .localCheckpoint()
     )
-    _prev_id = local_checkpoint_rdd_id(ranks)
     # The node universe now lives on inside ew (synthetic rows) and ranks;
-    # its own checkpoint is dead from here (r14 — was retired at loop exit).
-    if _nodes_id is not None:
-        unpersist_rdd_ids(sc, {_nodes_id})
-        _nodes_id = None
+    # its own checkpoint is dead from here.
+    retire(node_ckpt)
 
     # Integer-floor teleport term, folded to a literal: Python // on
     # positive ints is the same truncation as SQL DIV.
@@ -314,26 +308,20 @@ def pagerank(
         # aggregate on nparts tasks — de-parallelizing the round. The rank
         # checkpoint simply keeps the edge table's partition count; the
         # blocks are tiny and the broadcast build reads them in parallel.
-        ranks = contrib.select(
+        prev, ranks = ranks, contrib.select(
             F.col("_v").alias("node"),
             (teleport + F.col("_in")).cast("bigint").alias("pr_scaled"),
         ).localCheckpoint()
-        new_id = local_checkpoint_rdd_id(ranks)
-        if _prev_id is not None:
-            unpersist_rdd_ids(sc, {_prev_id})
-        _prev_id = new_id
+        retire(prev)
 
     # The returned DataFrame is fully materialized (each round's checkpoint
-    # is eager), so the scaffolding checkpoints — the weighted edge table
-    # and the node universe — are dead weight the moment the loop exits:
-    # retire them HERE (r13 opt: ew alone pinned ~240 MB of deserialized
-    # edge blocks per pagerank call for the rest of the session, the
-    # dominant ext-bench interference leak). The final ranks checkpoint IS
-    # the result; it retires at the next query boundary via the tracked
-    # result-checkpoint registry.
-    for rid in (_ew_id, _nodes_id):
-        if rid is not None:
-            unpersist_rdd_ids(sc, {rid})
+    # is eager), so the weighted edge table is dead weight the moment the
+    # loop exits: retire it HERE (r13 opt: ew alone pinned ~240 MB of
+    # deserialized edge blocks per pagerank call for the rest of the
+    # session, the dominant ext-bench interference leak). The final ranks
+    # checkpoint IS the result; it retires at the next query boundary as a
+    # tracked handle.
+    retire(ew)
     return track_result_checkpoint(ranks)
 
 

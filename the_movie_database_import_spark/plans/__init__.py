@@ -41,7 +41,7 @@ def _wrap_release(spec: QuerySpec) -> QuerySpec:
       label table, ``q_pipeline_end_to_end``'s span checkpoint): q1's
       execution FAILS with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``, because
       localCheckpoint truncated the lineage that could recompute the
-      freed blocks (``session._TRACKED_RESULT_CHECKPOINTS``).
+      blocks ``session.retire`` freed through the checkpoint's handle.
 
     ROADMAP direction 4 (query-scoped resource lifetimes) replaces this
     build-time release with one released when the query's execution ends."""

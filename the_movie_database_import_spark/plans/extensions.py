@@ -1909,11 +1909,7 @@ def q_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows identical. The blocks are retired explicitly right after the
     # span checkpoint materializes (they are dead from that point; the
     # r13 leak discipline).
-    from ..session import (
-        local_checkpoint_rdd_id,
-        track_result_checkpoint,
-        unpersist_rdd_ids,
-    )
+    from ..session import retire, track_result_checkpoint
 
     dd = (
         incremental_dedup(increment, seen)
@@ -1921,7 +1917,6 @@ def q_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .localCheckpoint()
     )
-    _dd_id = local_checkpoint_rdd_id(dd)
     seen_grams = substring_gram_digests(yesterday, k=8)
     # The span-deduped increment is the composite's midpoint: everything
     # downstream (decontaminate -> redact -> quality -> split -> chunk ->
@@ -1931,7 +1926,7 @@ def q_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decontaminate's two reads (gram probe + anti-join) hit materialized
     # blocks. Identical rows (a checkpoint is a pure materialization
     # barrier; oracle parity green). The block retires at the next query
-    # boundary via the tracked result registry.
+    # boundary as a tracked handle.
     spans = track_result_checkpoint(
         dedup_substring_spans_incremental(dd, seen_grams, k=8)
         .select("doc_id", "text")
@@ -1940,8 +1935,7 @@ def q_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dd's checkpoint fed exactly the two span-stage reads, both inside
     # the spans materialization above — retire it now, not at the next
     # query boundary.
-    if _dd_id is not None:
-        unpersist_rdd_ids(spark.sparkContext, {_dd_id})
+    retire(dd)
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     clean = decontaminate(spans, bench, n=3)
     red = clean.select(
@@ -3954,8 +3948,8 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     that unrolls the same recurrence as ten chained CTEs (the engine's
     second hash-exact iterative fixpoint beside the connected-components
     closure). One shuffle-join + one aggregate per round, edges
-    checkpointed once, previous round's blocks retired by RDD id. Top
-    100 by rank, smallest-node tiebreak."""
+    checkpointed once, previous round's checkpoint retired through its
+    handle. Top 100 by rank, smallest-node tiebreak."""
     from ..operators.graph import cooccurrence_edges, pagerank
 
     li = load_table(spark, sf_dir, "lineitem")

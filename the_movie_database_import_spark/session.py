@@ -16,42 +16,65 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 DEFAULT_APP_NAME = "the-movie-database-import-spark"
 
-# Caches created by engine operators (minhash collapse, ETL parse reuse, ...).
-# A long-lived session (the external harness's, a notebook's) would otherwise
-# accumulate executor storage across queries — tracked caches are released
-# when the NEXT registry query starts (plans/__init__ wraps every entry) and
-# explicitly at pipeline/bench completion points, so at most one query's
-# working set is ever retained.
-_TRACKED_CACHES: list[DataFrame] = []
-
-# RESULT localCheckpoints (the final snapshot an iterative operator RETURNS:
-# pagerank's rank table, connected components' label table). They cannot
-# retire inside their operator — the returned DataFrame reads exactly these
-# blocks — so they are registered here and reclaimed with the same
-# next-query-boundary discipline as the SQL caches (r13 opt: without this,
-# every pagerank/CC RUN pinned its result blocks for the session's lifetime;
-# a 4-pass bench sweep accumulated ~1 GB of dead checkpoint blocks).
+# Every handle an engine operator leaves live past its own return, in one
+# list: tracked SQL caches (minhash collapse, ETL parse reuse, ...) and
+# RESULT localCheckpoints (the final snapshot an iterative operator
+# RETURNS: pagerank's rank table, connected components' label table, the
+# pipeline's span table). A long-lived session (the external harness's, a
+# notebook's) would otherwise accumulate executor storage across queries
+# (r13: every pagerank/CC run pinned its result blocks for the session's
+# lifetime; a 4-pass bench sweep accumulated ~1 GB of dead checkpoint
+# blocks). :func:`release_caches` retires them when the NEXT registry query
+# starts (plans/__init__ wraps every entry) and explicitly at pipeline/bench
+# completion points, so at most one query's working set is ever retained.
 # The strict build->execute interleave assumption documented on
 # plans/__init__._wrap_release applies: re-executing a query's DataFrame
-# after the NEXT query was built errors on the freed checkpoint (it cannot
+# after the NEXT query was built errors on a freed checkpoint (it cannot
 # recompute — lineage is truncated) instead of silently recomputing.
-_TRACKED_RESULT_CHECKPOINTS: list[tuple] = []  # (SparkContext, rdd_id)
+_TRACKED: list[DataFrame] = []
+
+
+def _checkpoint_rdd(df: DataFrame):
+    """The pinned JVM RDD behind a localCheckpointed DataFrame (its analyzed
+    plan is a LogicalRDD wrapping the checkpoint RDD), else None. A view of
+    a checkpoint (``coalesce``, ``select``) is not one: its plan is a
+    Repartition or Project over the LogicalRDD."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.rdd() if plan.getClass().getSimpleName() == "LogicalRDD" else None
+
+
+def retire(*dfs: DataFrame) -> None:
+    """Free each handle's storage now: a checkpoint's pinned blocks, a
+    cache's SQL cache entry (``blocking=True``: the storage is free when
+    this returns). Anything else raises instead of silently leaking, e.g.
+    a coalesce view of a checkpoint: retire the checkpoint it reads.
+    NEVER retire a checkpoint that a live plan still reads: localCheckpoint
+    truncates lineage, so freed blocks cannot be recomputed
+    (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)."""
+    for df in dfs:
+        if df.is_cached:
+            df.unpersist(blocking=True)
+            continue
+        rdd = _checkpoint_rdd(df)
+        if rdd is None:
+            raise ValueError("retire takes a localCheckpoint or a cached DataFrame")
+        rdd.unpersist(False)
 
 
 def tracked_cache(df: DataFrame) -> DataFrame:
     """``df.cache()`` + registration for :func:`release_caches`."""
     df.cache()
-    _TRACKED_CACHES.append(df)
+    _TRACKED.append(df)
     return df
 
 
 def track_result_checkpoint(df: DataFrame) -> DataFrame:
-    """Register a localCheckpointed RESULT table for deferred retirement by
-    :func:`release_caches` (the next registry-query boundary). No-op when
-    ``df`` is not a direct checkpoint (id unresolvable)."""
-    rid = local_checkpoint_rdd_id(df)
-    if rid is not None:
-        _TRACKED_RESULT_CHECKPOINTS.append((df.sparkSession.sparkContext, rid))
+    """Register a localCheckpointed RESULT table for retirement by
+    :func:`release_caches` (the next registry-query boundary). Raises when
+    ``df`` is not itself a checkpoint."""
+    if _checkpoint_rdd(df) is None:
+        raise ValueError("track_result_checkpoint takes a localCheckpoint")
+    _TRACKED.append(df)
     return df
 
 
@@ -72,13 +95,24 @@ BROADCAST_BUDGET_ROWS = 8_000_000
 # short string token (offsets + bytes + row overhead).
 BROADCAST_BUDGET_ARRAY_ELEMS = 16_000_000
 
+# The engine's task sizing: ~64k rows per task.
+ROWS_PER_TASK = 65536
+
 # Row budget for the driver-side fast paths (connected components'
 # union-find, the BPE trainer's local merge loop): one scan-task's worth of
-# rows (the engine's ~64k rows/task sizing). Under it, collecting the input
-# and looping on the driver beats one distributed round-trip per step; far
-# over it, the Python pass would dwarf the job latency it saves. Operators
-# read it at call time, so a test can force the distributed branch.
-DRIVER_BUDGET_ROWS = 65536
+# rows. Under it, collecting the input and looping on the driver beats one
+# distributed round-trip per step; far over it, the Python pass would dwarf
+# the job latency it saves. Operators read it at call time, so a test can
+# force the distributed branch.
+DRIVER_BUDGET_ROWS = ROWS_PER_TASK
+
+
+def sized_partitions(sc, n_rows: int) -> int:
+    """Partition count for an ``n_rows`` table: one per ROWS_PER_TASK rows,
+    capped at cluster parallelism, floor 1. localCheckpoint materializes
+    the pre-AQE plan, so a small table otherwise keeps shuffle-partition-
+    many near-empty blocks and every later scan pays a task per block."""
+    return max(1, min(sc.defaultParallelism, n_rows // ROWS_PER_TASK + 1))
 
 
 def maybe_broadcast(df: DataFrame, *, n_rows: int,
@@ -96,67 +130,30 @@ def maybe_broadcast(df: DataFrame, *, n_rows: int,
 
 
 def release_caches() -> int:
-    """Unpersist every tracked cache; returns how many were released.
+    """Retire every tracked handle (:func:`retire`); returns how many.
 
-    ``blocking=True`` because the contract is "storage is free when this
-    returns": the default async unpersist leaves blocks (and the
-    getPersistentRDDs entries tests assert on) alive for an unbounded
-    moment after the call — under host load that moment stretches into the
-    next query's execution, which is exactly the overlap this function
-    exists to prevent. The wait is bounded by block-drop RPCs, paid once
-    per query boundary."""
-    n = len(_TRACKED_CACHES)
-    for df in _TRACKED_CACHES:
+    Blocking, because the contract is "storage is free when this returns":
+    the default async unpersist leaves blocks (and the
+    :func:`persistent_rdd_ids` entries tests assert on) alive for an
+    unbounded moment after the call — under host load that moment stretches
+    into the next query's execution, which is exactly the overlap this
+    function exists to prevent. The wait is bounded by block-drop RPCs,
+    paid once per query boundary."""
+    n = len(_TRACKED)
+    for df in _TRACKED:
         try:
-            df.unpersist(blocking=True)
+            retire(df)
         except Exception:  # session already stopped — nothing to release
             pass
-    _TRACKED_CACHES.clear()
-    for sc, rid in _TRACKED_RESULT_CHECKPOINTS:
-        try:
-            unpersist_rdd_ids(sc, {rid})
-        except Exception:  # session already stopped — nothing to release
-            pass
-    _TRACKED_RESULT_CHECKPOINTS.clear()
+    _TRACKED.clear()
     return n
 
 
 def persistent_rdd_ids(sc) -> set[int]:
-    """Ids of RDDs currently pinned in the executor block store.
-    localCheckpoint blocks live HERE, not in the SQL cache manager, so
-    :func:`release_caches` cannot reclaim them — iterative operators
-    (connected components, BPE training) retire their per-round snapshots
-    explicitly via id diffs against an entry snapshot. RDD ids are
-    monotonically increasing, so within a diff the newest pin is max()."""
+    """Ids of RDDs currently pinned in the executor block store
+    (localCheckpoint blocks and cached plans). Tests and the benchmark diff
+    it around a run to find pins a run left behind."""
     return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-
-
-def unpersist_rdd_ids(sc, ids: set[int]) -> None:
-    """Unpersist the given pinned RDD ids (no-op for ids already gone).
-    NEVER call on an id whose localCheckpoint data is still referenced by
-    a live plan: localCheckpoint truncates lineage, so freed blocks cannot
-    be recomputed (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)."""
-    jmap = sc._jsc.getPersistentRDDs()
-    for rid in ids:
-        jrdd = jmap.get(rid)
-        if jrdd is not None:
-            jrdd.unpersist(False)
-
-
-def local_checkpoint_rdd_id(df) -> int | None:
-    """The EXACT pinned RDD id behind a localCheckpointed DataFrame (its
-    analyzed plan is a LogicalRDD wrapping the checkpoint RDD). Iterative
-    operators use this to retire exactly their own retired snapshots —
-    an id-set diff is unsound because unrelated caches can materialize
-    (and register persistent RDDs) during the same job that materializes
-    a checkpoint. Returns None when the plan is not a checkpoint."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() != "LogicalRDD":
-            return None
-        return int(plan.rdd().id())
-    except Exception:
-        return None
 
 
 _PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))

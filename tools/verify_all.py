@@ -11,10 +11,12 @@ leak into the next gate):
 2. exact_parity at sf0.01 AND sf0.1      (driver-exact oracle sweeps)
 3. exact_parity VANILLA mode at sf0.01   (driver-environment simulation)
 4. pytest perfbench/test_smoke.py        (the declared benchmark still runs)
-5. bench.py                              (frozen 16-query headline)
-6. bench.py --set tag:ext                (the extension series)
+5. perfbench iterative, traced           (PageRank, pipeline, MinHash savings:
+                                          digests match, no pinned RDD left)
+6. bench.py                              (frozen 16-query headline)
+7. bench.py --set tag:ext                (the extension series)
 
---fast skips 5-6 (the timing gates) for a correctness-only pass.
+--fast skips 6-7 (the timing gates) for a correctness-only pass.
 Prints one JSON summary line and exits non-zero if any gate fails.
 """
 
@@ -29,7 +31,21 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run(name: str, cmd: list[str], env: dict | None = None) -> dict:
+def iterative_ok(stdout: str) -> bool:
+    """perfbench exits 0 even when a digest mismatches, so read its result
+    line: every output correct and no RDD left pinned after the run."""
+    lines = stdout.strip().splitlines()
+    if not lines:
+        return False
+    try:
+        res = json.loads(lines[-1])
+        pinned = res["metrics"]["session.pinned_rdds_after"]["value"]
+    except (ValueError, KeyError, TypeError):
+        return False
+    return res.get("correct") is True and pinned == 0
+
+
+def run(name: str, cmd: list[str], env: dict | None = None, check=None) -> dict:
     t0 = time.time()
     e = dict(os.environ)
     e["PYTHONPATH"] = ROOT
@@ -41,7 +57,7 @@ def run(name: str, cmd: list[str], env: dict | None = None) -> dict:
     tail = "\n".join((p.stdout + p.stderr).strip().splitlines()[-3:])
     return {
         "gate": name,
-        "ok": p.returncode == 0,
+        "ok": p.returncode == 0 and (check is None or check(p.stdout)),
         "secs": round(time.time() - t0, 1),
         "tail": tail[-300:],
     }
@@ -69,6 +85,13 @@ def main() -> int:
             {"SPARK_GRAFT_VANILLA": "1"},
         ),
         ("perfbench_smoke", [py, "-m", "pytest", "perfbench/test_smoke.py", "-q"], None),
+        (
+            "perfbench_iterative",
+            [py, "perfbench/run.py", "--workload", "iterative", "--seed", "1"]
+            + ["--seconds", "1", "--trace", "1"],
+            None,
+            iterative_ok,
+        ),
     ]
     if not fast:
         gates += [
