@@ -2385,7 +2385,9 @@ def test_substring_search_equals_naive_scan(spark):
     """The trigram prefilter is NECESSARY (every true match contains all
     pattern trigrams) and verification is SUFFICIENT — so the
     accelerated path equals the naive contains() scan on the real
-    corpus, for several patterns including one with zero matches."""
+    corpus, for several patterns including one with zero matches. The
+    zero-match pattern prunes to zero candidates, so verification reads
+    no document text for it."""
     from the_movie_database_import_spark.operators.dedup import (
         build_trigram_index,
         substring_search,
@@ -2406,6 +2408,16 @@ def test_substring_search_equals_naive_scan(spark):
                 ).collect()
             }
             assert got == want, pat
+        absent = "zzz-not-present"
+        tris = {absent[i : i + 3] for i in range(len(absent) - 2)}
+        n_candidates = (
+            idx.filter(F.col("trigram").isin(sorted(tris)))
+            .groupBy("doc_id")
+            .count()
+            .filter(F.col("count") == len(tris))
+            .count()
+        )
+        assert n_candidates == 0
     finally:
         idx.unpersist()
 
@@ -3191,6 +3203,85 @@ def test_pq_index_recall_probe_exactness_and_floor(spark, tmp_path):
     assert all(abs(r.recall - r.hits / 5) < 1e-9 for r in tight)
     mean_recall = sum(r.recall for r in tight) / len(tight)
     assert mean_recall >= 0.5, f"probe floor collapsed: {mean_recall}"
+
+
+def test_pq_index_rebuild_on_drift_recovers_recall(spark, tmp_path):
+    """The maintenance loop `pq_index_append`'s docstring prescribes, run
+    end to end with planted drift: build, append a drift batch, probe it,
+    rebuild at the same path, re-probe, vacuum. The base corpus lives in
+    the positive orthant and the drift batch in the negative one, so the
+    build-time codebooks have no support where the drift sub-vectors land:
+    they snap to boundary codes and the ADC shortlist goes blind. The
+    drift batch has the base corpus's internal geometry, so a retrained
+    index resolves it again. The recall figures themselves are left
+    unpinned; only the floor crossings are."""
+    import os
+
+    import numpy as np
+    import pandas as pd
+
+    from the_movie_database_import_spark.operators.similarity import (
+        pq_index_append,
+        pq_index_build,
+        pq_index_recall_probe,
+        pq_index_topk,
+    )
+    from the_movie_database_import_spark.sources.writers import snapshot_vacuum
+
+    n_base, n_drift, d, k, shortlist, n_q = 400, 100, 16, 5, 40, 20
+    rng = np.random.default_rng(7)
+    base = np.abs(rng.standard_normal((n_base, d)))
+    base /= np.linalg.norm(base, axis=1, keepdims=True)
+    drift = -np.abs(rng.standard_normal((n_drift, d)))
+    drift /= np.linalg.norm(drift, axis=1, keepdims=True)
+
+    def frame(mat, start):
+        return spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "vec_id": np.arange(start, start + len(mat)),
+                    "embedding": list(mat.astype(np.float64)),
+                }
+            )
+        )
+
+    base_df = frame(base, 0)
+    drift_df = frame(drift, n_base)
+    full_df = base_df.unionByName(drift_df)
+    base_q = base_df.filter(F.col("vec_id") < n_q)
+    drift_q = drift_df.filter(F.col("vec_id") < n_base + n_q)
+    path = str(tmp_path / "idx")
+
+    def recall(corpus, queries):
+        rows = pq_index_recall_probe(
+            spark, path, corpus, queries, k=k, shortlist=shortlist
+        ).collect()
+        return sum(r.recall for r in rows) / len(rows)
+
+    def exact_serve():
+        # shortlist >= corpus: the served top-k is brute force whatever
+        # the codebooks, so a rebuild must not change it
+        rows = pq_index_topk(
+            spark, path, full_df, base_q, k=k, shortlist=n_base + n_drift
+        ).collect()
+        return sorted((r.query_id, r.vec_id, r.cosine) for r in rows)
+
+    pq_index_build(base_df, path, m=4, n_centroids=16)
+    floor = recall(base_df, base_q) - 0.05
+
+    pq_index_append(drift_df, path)
+    before = recall(full_df, drift_q)
+    assert before < floor, f"drift batch {before} did not cross floor {floor}"
+    served_before = exact_serve()
+
+    pq_index_build(full_df, path, m=4, n_centroids=16)
+    after = recall(full_df, drift_q)
+    assert after >= floor, f"rebuild left drift batch at {after} < {floor}"
+    assert exact_serve() == served_before
+
+    snapshot_vacuum(path, keep=1)
+    sidecars = [f for f in os.listdir(path) if f.startswith("_pqindex-")]
+    assert len(sidecars) == 1, sidecars
 
 
 def test_vocab_merge_incremental_composition_identity(spark, tmp_path):

@@ -190,6 +190,58 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS ord_bucketed")
 
 
+def test_bucketed_flagship_matches_registered_query(spark, tmp_path):
+    """The flagship star join over orderkey-bucketed facts: the same
+    `flagship_star_revenue_over` plan the registered headline query builds
+    over raw parquet returns the same rows, and the lineitem ⋈ orders join
+    shuffles neither side on orderkey — the shuffle was paid at ingest.
+    Broadcast is off so the fact join plans as at 100 TB, where neither
+    side fits one; the explicit customer hint still broadcasts."""
+    from the_movie_database_import_spark.plans.relational import (
+        flagship_star_revenue_over,
+    )
+    from the_movie_database_import_spark.sources.readers import load_table
+    from the_movie_database_import_spark.sources.writers import write_bucketed
+
+    li = load_table(spark, SF_DIR, "lineitem")
+    orders = load_table(spark, SF_DIR, "orders")
+    customer = load_table(spark, SF_DIR, "customer")
+
+    def orderkey_exchanges(df) -> int:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return sum(
+            plan.count(f"Exchange hashpartitioning({k}")
+            for k in ("l_orderkey", "o_orderkey")
+        )
+
+    registered = REGISTRY["q_flagship_star_revenue"].spark_fn(spark, SF_DIR)
+    want = [tuple(r) for r in registered.collect()]
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        write_bucketed(
+            li, "li_flagship", str(tmp_path / "li"),
+            bucket_by=["l_orderkey"], n_buckets=8, sort_by=["l_orderkey"],
+        )
+        write_bucketed(
+            orders, "ord_flagship", str(tmp_path / "ord"),
+            bucket_by=["o_orderkey"], n_buckets=8, sort_by=["o_orderkey"],
+        )
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        raw = flagship_star_revenue_over(li, orders, customer)
+        bucketed = flagship_star_revenue_over(
+            spark.table("li_flagship"), spark.table("ord_flagship"), customer
+        )
+        assert orderkey_exchanges(raw) >= 1, "raw plan unexpectedly shuffle-free"
+        assert orderkey_exchanges(bucketed) == 0, (
+            "bucketed plan still shuffles on orderkey"
+        )
+        assert [tuple(r) for r in bucketed.collect()] == want
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        spark.sql("DROP TABLE IF EXISTS li_flagship")
+        spark.sql("DROP TABLE IF EXISTS ord_flagship")
+
+
 def test_spans_incremental_bucketed_side_no_exchange(spark, tmp_path):
     """The incremental span-dedup probe's corpus side must NOT shuffle when
     the gram-digest side table is bucketed on the digest (VERDICT r07 #4):

@@ -131,29 +131,48 @@ def test_training_shards_sink_layout_order_and_determinism(spark, tmp_path):
     ), f"expected explicit Sort [shard, pos] in plan, got sorts={sorts}"
 
 
+def overlap_fraction(path: str, box: dict[str, tuple[float, float]]) -> float:
+    """Fraction of row groups whose [min,max] stats intersect the box on
+    EVERY constrained column — the row groups a reader must fetch. This is
+    the pruning decision Spark's parquet reader makes per row group."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    total = hit = 0
+    for f in glob.glob(os.path.join(path, "*.parquet")):
+        md = pq.ParquetFile(f).metadata
+        schema_names = md.schema.to_arrow_schema().names
+        idx = {c: schema_names.index(c) for c in box}
+        for rg in range(md.num_row_groups):
+            total += 1
+            g = md.row_group(rg)
+            ok = True
+            for c, (lo, hi) in box.items():
+                st = g.column(idx[c]).statistics
+                if st is None or st.min is None:
+                    continue  # no stats -> cannot prune, must read
+                if st.max < lo or st.min > hi:
+                    ok = False
+                    break
+            hit += ok
+    return hit / total if total else 1.0
+
+
 def test_zordered_layout_prunes_multi_dim(spark, tmp_path):
     """Z-order vs single-column sort at row-group granularity: a selective
     box on the SECOND dimension must let the z-ordered layout skip row
     groups the single-column sort cannot (its suppkey min/max spans
     everything), and the two-dimension box must prune on both layouts.
-    Uses the same footer-stats overlap rule Spark's parquet reader applies
-    per row group (via tools/zorder_showcase.py's measurement helper)."""
-    import importlib.util
-    import os
-
+    Uses the footer-stats overlap rule of :func:`overlap_fraction`."""
     from the_movie_database_import_spark.sources.writers import write_zordered
 
-    spec = importlib.util.spec_from_file_location(
-        "zorder_showcase",
-        os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools",
-                     "zorder_showcase.py"),
-    )
-    zs = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(zs)
-
     li = load_table(spark, SF_DIR, "lineitem")
+    pk_hi = li.agg(F.max("l_partkey")).first()[0]
     sk_hi = li.agg(F.max("l_suppkey")).first()[0]
     box = {"l_suppkey": (0.45 * sk_hi, 0.55 * sk_hi)}
+    box_both = {**box, "l_partkey": (0.45 * pk_hi, 0.55 * pk_hi)}
 
     sorted_p = str(tmp_path / "sorted_pk")
     (
@@ -168,10 +187,12 @@ def test_zordered_layout_prunes_multi_dim(spark, tmp_path):
         parquet_block_bytes=64 * 1024,
     )
 
-    f_sorted = zs.overlap_fraction(sorted_p, box)
-    f_z = zs.overlap_fraction(z_p, box)
+    f_sorted = overlap_fraction(sorted_p, box)
+    f_z = overlap_fraction(z_p, box)
     assert f_sorted > 0.9, f_sorted  # single-col sort cannot prune dim 2
     assert f_z < 0.6 * f_sorted, (f_z, f_sorted)
+    assert overlap_fraction(sorted_p, box_both) < 1.0
+    assert overlap_fraction(z_p, box_both) < 1.0
 
     # round-trip integrity: same rows come back, no helper columns leak
     back = spark.read.parquet(z_p)
@@ -188,8 +209,10 @@ def test_zordered_layout_prunes_multi_dim(spark, tmp_path):
 def test_compact_small_files_reduces_count_and_preserves_rows(spark, tmp_path):
     """OPTIMIZE-style compaction: 64 tiny files collapse to the byte-target
     count, every row survives bit-identically, and the swap leaves a
-    readable directory. With sort_cols, file row-ranges become disjoint
-    (the clustering the rewrite collects for free)."""
+    readable directory whose scan runs as one task (the per-file task
+    overhead is the tax compaction removes). With sort_cols, file
+    row-ranges become disjoint (the clustering the rewrite collects for
+    free)."""
     import os
 
     from the_movie_database_import_spark.sources.writers import (
@@ -202,6 +225,7 @@ def test_compact_small_files_reduces_count_and_preserves_rows(spark, tmp_path):
     before = sorted(
         r["event_id"] for r in spark.read.parquet(src).collect()
     )
+    tasks_before = spark.read.parquet(src).rdd.getNumPartitions()
 
     stats = compact_small_files(spark, src, target_file_bytes=10**9)
     assert stats["files_before"] == 64
@@ -209,6 +233,8 @@ def test_compact_small_files_reduces_count_and_preserves_rows(spark, tmp_path):
     assert stats["rows"] == len(before)
     after = sorted(r["event_id"] for r in spark.read.parquet(src).collect())
     assert after == before
+    tasks_after = spark.read.parquet(src).rdd.getNumPartitions()
+    assert tasks_after == 1 < tasks_before, (tasks_before, tasks_after)
 
     # sorted variant: disjoint per-file event_id ranges
     src2 = str(tmp_path / "events_sorted")

@@ -108,10 +108,6 @@ def load_inputs(spark: SparkSession, base_dir: str) -> dict[str, DataFrame]:
     }
 
 
-def _first_wins(df: DataFrame, key: str, order_cols: list[str]) -> Window:
-    return Window.partitionBy(key).orderBy(*order_cols)
-
-
 def _valid_id(df: DataFrame, src_col: str, out_col: str) -> DataFrame:
     """Safe cast + skip-invalid filter (ref A3, `loader.py:123-127`)."""
     return df.withColumn(out_col, F.col(src_col).try_cast("bigint")).filter(

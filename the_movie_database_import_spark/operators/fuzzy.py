@@ -92,12 +92,12 @@ def fuzzy_pairs_edit1(
     deletion variants per row (len+1) and a ~1.36x bigger O(len_a x
     len_b) Levenshtein DP per candidate in the verify stage (the stage
     the extra CPU concentrated in: verify 3.43x vs candidates 2.8x).
-    With the length-preserving generator (tools/bench_scaling.py v2,
-    first-two-chars replacement), output pairs measure exactly 3.00x
-    (262,500 -> 787,500) and CPU medians 3.1x over 5 repeated passes —
-    linear; single-pass CPU readings on the shared host swing far wider
-    (3.1x-4.9x across same-hour runs), so only repeated medians are
-    evidence.
+    With the length-preserving generator (first-two-chars replacement,
+    `git show 691c719:tools/bench_scaling.py`), output pairs measure
+    exactly 3.00x (262,500 -> 787,500) and CPU medians 3.1x over 5
+    repeated passes — linear; single-pass CPU readings on the shared host
+    swing far wider (3.1x-4.9x across same-hour runs), so only repeated
+    medians are evidence.
     Genuine cost drivers at 100 TB: CPU ~ n_rows x avg_len for variant
     generation + n_candidates x avg_len^2 for verification — candidate
     count, not input rows, is the term to watch, and it is bounded by

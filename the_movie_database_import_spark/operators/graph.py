@@ -418,6 +418,8 @@ def triangle_counts(
         .groupBy("x")
         .agg(F.collect_set("y").alias("_adj"))
     )
+    # The arrays hold m elements in total, so the 8M-row guard on 2*m caps
+    # them below BROADCAST_BUDGET_ARRAY_ELEMS: the row budget is enough.
     a_x = maybe_broadcast(
         oadj.select(F.col("x"), F.col("_adj").alias("_ax")), n_rows=2 * m
     )

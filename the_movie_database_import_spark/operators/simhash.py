@@ -1,7 +1,7 @@
 """SimHash near-duplicate detection ([ext], north star `dedup_simhash`).
 
 The 64-bit signature is computed in an Arrow-batched pandas UDF (the
-showcase of the vectorized Python path — per-token MD5 is not expressible
+model use of the vectorized Python path — per-token MD5 is not expressible
 with builtins, and a scalar Python UDF would be 10-100x slower). Candidate
 generation and Hamming verification stay JVM-side: band buckets + ``bit_count``
 on XOR — no Python in the pair phase.

@@ -83,9 +83,9 @@ def q_flagship_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem ⋈ orders ⋈ customer → revenue per market segment. The customer
     dimension is broadcast (small side); the lineitem⋈orders join shuffles on
     orderkey — at 100 TB both sides would be bucketed on orderkey to make
-    this a shuffle-free sort-merge join (measured end-to-end by
-    tools/bucketed_showcase.py over :func:`flagship_star_revenue_over`;
-    past numbers in ``git show 9d8feb5:PLANS.md``)."""
+    this a shuffle-free sort-merge join (:func:`flagship_star_revenue_over`
+    over bucketed facts is pinned by tests/test_plans.py; past numbers in
+    ``git show 9d8feb5:PLANS.md``)."""
     lineitem = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
@@ -99,7 +99,8 @@ def flagship_star_revenue_over(
     same logical plan runs against raw parquet scans (the registered
     headline query) or orderkey-bucketed tables (the 100 TB answer: the
     lineitem⋈orders shuffle disappears because bucketing pre-paid it at
-    ingest; see tools/bucketed_showcase.py)."""
+    ingest; pinned by ``test_bucketed_flagship_matches_registered_query``
+    in tests/test_plans.py)."""
     return (
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)

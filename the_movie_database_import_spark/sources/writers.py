@@ -351,8 +351,8 @@ def write_zordered(
     any other; the Z-curve trades a little per-column locality for
     locality in EVERY listed column, so a selective filter on ANY of them
     (or a box on several) skips most row groups storage-side.
-    `tools/zorder_showcase.py` measures the effect and
-    tests/test_sinks.py pins it structurally.
+    tests/test_sinks.py::test_zordered_layout_prunes_multi_dim pins the
+    effect (sf0.1 fractions: `git show 691c719:tools/zorder_showcase.py`).
 
     Scale shape: per-column equal-width bucket ids come from one tiny
     min/max aggregate (2 scalars per column, broadcast back in-plan via a

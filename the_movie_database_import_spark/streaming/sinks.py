@@ -244,24 +244,3 @@ def vocab_merge_batch_writer(
         )
 
     return sink
-
-
-def run_vocab_merge(
-    stream_df: DataFrame,
-    side_path: str,
-    checkpoint: str,
-    *,
-    text_col: str = "text",
-    available_now: bool = True,
-):
-    """Run a document stream into the incremental vocabulary side table
-    via the idempotent merge writer. ``availableNow`` drains the source
-    and stops (the batch-parity testing mode); False for continuous."""
-    writer = stream_df.writeStream.foreachBatch(
-        vocab_merge_batch_writer(side_path, text_col=text_col)
-    ).option("checkpointLocation", checkpoint)
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
