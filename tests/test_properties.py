@@ -4,7 +4,9 @@ hand-picked fixtures under-cover (SURVEY.md §7.4/§7.5 hard parts):
 - positive-or-null cleansing vs an independent model of the reference's
   `is_positive_integer`/`is_positive_float` (`loader.py:31-50`);
 - the Python-repr nested-cell parser vs `ast.literal_eval` ground truth
-  (apostrophes, quotes, None, junk — `loader.py:146` et al.);
+  (apostrophes, quotes, None, junk — `loader.py:146` et al.), and its
+  native `from_json` branch vs the `literal_eval` fallback for all six
+  cell shapes;
 - rolling-hash fingerprint vs a pure-Python model;
 - surrogate-id assignment invariant under row permutation/duplication.
 
@@ -209,6 +211,144 @@ def test_repr_array_parser_matches_literal_eval(spark, cells):
         assert [(e["id"], e["name"]) for e in truth] == [
             (e.id, e.name) for e in out
         ]
+
+
+# Nested cells for every parse shape, near and inside the canonical repr
+# grammar. Names carry the tokens the native rewrite must not touch
+# (': None', a 'job' key), both quote kinds, escapes, control characters
+# and text outside the BMP.
+tricky_name = st.one_of(
+    st.text(alphabet=st.sampled_from("ab N'\":,{}[]"), max_size=12),
+    name_text,
+    st.sampled_from(
+        [
+            "Act': None", "x': None, 'id': 5", ": None}", "None", "O'Brien",
+            "O'Brien': None", "a 'k': None, b", "a 'id': None}", "it's 'job': here",
+            'say "hi"', "both ' and \"",
+            "back\\slash", "caf\xe9", "tab\there", "new\nline", "nul\x00",
+            "\x7f", " ", "nbsp\xa0", "\U0001f600 outside the BMP",
+        ]
+    ),
+)
+py_value = st.one_of(
+    st.none(),
+    st.booleans(),
+    st.integers(-1000, 1000),
+    st.integers(-(2**70), 2**70),  # int64 and beyond
+    st.sampled_from([12.0, -3.5, 1e999]),  # float ids; 1e999 is inf
+    st.integers(0, 99).map(str),  # string ids: '12'
+    tricky_name,
+)
+# A string written without repr's escaping: raw control characters and
+# backslashes between quotes, as a hand-edited CSV could hold them.
+raw_string = tricky_name.filter(lambda s: "'" not in s).map(lambda s: f"'{s}'")
+nested_keys = st.sampled_from(
+    ["id", "name", "job", "order", "iso_639_1", "iso_3166_1", "has_job", "ID",
+     "character", "profile_path", "", "a, ", "x y"]
+)
+
+
+def typed_value(key):
+    """The kind of value the key's field holds (ints beyond int64
+    included); any key's value is an int, a string or None in the repr
+    grammar."""
+    if key in ("id", "order"):
+        return st.one_of(st.none(), st.integers(-1000, 10**6), st.integers(-(2**66), 2**66))
+    if key in ("name", "job", "iso_639_1", "iso_3166_1"):
+        return st.one_of(st.none(), tricky_name)
+    return st.one_of(st.none(), st.integers(-1000, 1000), tricky_name)
+
+
+typed_pair = nested_keys.flatmap(lambda k: typed_value(k).map(lambda v: (k, v)))
+# Python objects, so repr gives the canonical text.
+py_dict = st.lists(typed_pair, max_size=4).map(dict)
+py_list = st.lists(py_dict, max_size=4)
+
+
+@st.composite
+def text_dict(draw):
+    """Dict text off the canonical grammar: values of the wrong kind
+    (float or string ids, booleans), duplicate keys, raw strings, ':'
+    without a space, trailing commas."""
+    pairs = draw(
+        st.lists(st.tuples(nested_keys, st.one_of(py_value.map(repr), raw_string)), max_size=4)
+    )
+    kv = draw(st.sampled_from([": ", ":"]))
+    body = ", ".join(f"{k!r}{kv}{v}" for k, v in pairs)
+    return "{" + body + draw(st.sampled_from(["", ","])) + "}"
+
+
+@st.composite
+def text_list(draw):
+    """List text off the grammar: non-dict elements, trailing commas."""
+    items = draw(
+        st.lists(
+            st.one_of(text_dict(), py_dict.map(repr), st.sampled_from(["5", "None", "'x'"])),
+            max_size=4,
+        )
+    )
+    return "[" + ", ".join(items) + draw(st.sampled_from(["", ","])) + "]"
+
+
+trailing_text = st.sampled_from([" trailing", "\n", " ", "]", ", 5"])
+
+
+def nested_cell(is_list: bool):
+    canonical = (py_list if is_list else py_dict).map(repr)
+    kinds = [
+        st.none(),
+        st.sampled_from(["", " ", "not a literal [", "[", "{}", "[]"]),
+        st.builds(lambda c, t: c + t, canonical, trailing_text),
+        text_list() if is_list else text_dict(),
+        (py_dict if is_list else py_list).map(repr),  # the other top-level kind
+    ]
+    # half of the cells are canonical reprs
+    return st.integers(0, 2 * len(kinds) - 1).flatmap(
+        lambda i: kinds[i] if i < len(kinds) else canonical
+    )
+
+
+@SETTINGS
+@given(data=st.data())
+def test_native_or_fallback_parse_matches_literal_eval_path(spark, data):
+    """For all six shapes, the native-or-fallback parse equals the
+    literal_eval path, row for row: the guard must route every cell that
+    from_json would read differently (float or string ids, Python escapes,
+    trailing text, non-dict elements, ids beyond int64, ...) to the
+    fallback, and the None / has_job rewrites must be exact on the rest."""
+    import json
+
+    from the_movie_database_import_spark.etl.parse import (
+        CAST,
+        COLLECTION,
+        COUNTRIES,
+        CREW,
+        ID_NAMES,
+        LANGS,
+        parse_nested,
+    )
+
+    shapes = {
+        "ids": ID_NAMES, "langs": LANGS, "countries": COUNTRIES,
+        "crew": CREW, "cast": CAST, "collection": COLLECTION,
+    }
+    rows = data.draw(
+        st.lists(
+            st.tuples(*[nested_cell(s.is_list) for s in shapes.values()]),
+            min_size=20,
+            max_size=60,
+        )
+    )
+    df = spark.createDataFrame(rows, ", ".join(f"{n} string" for n in shapes))
+    got = df.select(*parse_nested(**{n: (n, s) for n, s in shapes.items()})).collect()
+    for row, out in zip(rows, got):
+        for (n, shape), cell in zip(shapes.items(), row):
+            want = shape.literal_json(cell)
+            want = None if want is None else json.loads(want)
+            g = out[n]
+            if g is not None:
+                g = [e.asDict() for e in g] if shape.is_list else g.asDict()
+            assert g == want, (n, cell)
 
 
 @SETTINGS

@@ -221,6 +221,86 @@ def test_crew_by_job_map(tables):
     assert m == {(1, "Director"): {102}}           # last row; no-job people absent
 
 
+def test_parse_selects_are_native_with_one_python_udf(spark, tmdb_dir):
+    """Each input table's parse (the three caches `build_all_tables`
+    registers) runs `from_json` and at most one Python UDF in at most one
+    Python eval node, whatever its number of nested columns: a return to a
+    UDF per column fails here."""
+    import re
+
+    from the_movie_database_import_spark import session
+    from tools.plan_manifest import plan_counts
+
+    n0 = len(session._TRACKED)
+    build_all_tables(spark, tmdb_dir)
+    caches = session._TRACKED[n0:]
+    by_input = {
+        table: df
+        for df in caches
+        for table, col in (
+            ("movies", "genres_arr"), ("credits", "crew_arr"), ("keywords", "keyword_id")
+        )
+        if col in df.columns
+    }
+    assert len(caches) == len(by_input) == 3
+    for table, df in by_input.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "from_json(" in plan, table
+        assert plan_counts(df)["python_eval"] <= 1, table
+        assert len(set(re.findall(r"pythonUDF\d+", plan))) <= 1, table
+
+
+# Cells that raised inside the literal_eval path and failed the whole job:
+# an unhashable dict key (TypeError), parser stack exhaustion (MemoryError),
+# int(inf) (OverflowError) and an id beyond int64 (OverflowError in the
+# Arrow conversion).
+CRASH_LIST_CELLS = [
+    "[{[]: 1}]",
+    "-" * 100000 + "1",
+    "[{'id': 1e999, 'order': 1e999, 'name': 'x'}]",
+    "[{'id': 99999999999999999999, 'order': -99999999999999999999, 'name': 'x'}]",
+]
+
+
+def test_malformed_cells_parse_to_null_in_every_parser(spark):
+    """Every shape's parse turns each crash cell into NULL — the whole cell
+    where it does not evaluate, the out-of-range id where it does — and the
+    job survives."""
+    from the_movie_database_import_spark.etl.parse import (
+        CAST,
+        COLLECTION,
+        COUNTRIES,
+        CREW,
+        ID_NAMES,
+        LANGS,
+        parse_nested,
+    )
+
+    shapes = {
+        "ids": ID_NAMES, "langs": LANGS, "countries": COUNTRIES,
+        "crew": CREW, "cast": CAST, "collection": COLLECTION,
+    }
+    rows = [
+        (c, c if i == 1 else c[1:-1]) for i, c in enumerate(CRASH_LIST_CELLS)
+    ]
+    df = spark.createDataFrame(rows, "l string, d string")
+    got = df.select(
+        *parse_nested(
+            **{n: ("d" if s is COLLECTION else "l", s) for n, s in shapes.items()}
+        )
+    ).collect()
+    for r in got[:2]:
+        assert all(r[n] is None for n in shapes), r
+    for r in got[2:]:
+        for n in ("ids", "crew", "cast"):
+            assert [(e.id, e.name) for e in r[n]] == [(None, "x")], (n, r)
+        assert [e.order for e in r.cast] == [None]
+        assert [e.has_job for e in r.crew] == [False]
+        assert (r.collection.id, r.collection.name) == (None, "x")
+        assert [tuple(e) for e in r.langs] == [(None, "x")]
+        assert [tuple(e) for e in r.countries] == [(None, "x")]
+
+
 def test_parquet_roundtrip(spark, tmdb_dir, tmp_path):
     from the_movie_database_import_spark.sources.writers import write_all_parquet
 

@@ -1,32 +1,54 @@
-"""Python-repr nested-cell parsing (SURVEY.md §7.4, the one place the ETL
-keeps a Python UDF for reference parity).
+"""Python-repr nested-cell parsing (SURVEY.md §1.1, row A5): ``from_json``
+for every cell in the canonical repr grammar, ``ast.literal_eval`` for the
+rest.
 
 TMDB CSV cells hold ``repr()`` of Python objects — single quotes, ``None``,
-``True``/``False``, apostrophes inside names. ``from_json`` with
-``allowSingleQuotes`` (plus ``allowBackslashEscapingAnyCharacter`` and
-``allowUnquotedControlChars``) does parse them once bare ``None``/``True``/
-``False`` are rewritten to JSON literals: a probe matched ``ast.literal_eval``
-on 3,000 of 3,000 random reprs. The parse stays a UDF because that rewrite
-is a regex, and a regex cannot tell a bare ``None`` from one inside a quoted
-name (``'name': 'Act: None'``); and because Python reprs carry escapes JSON
-does not have, such as ``\\x..``.
+apostrophes inside names. ``from_json`` with ``allowSingleQuotes``,
+``allowBackslashEscapingAnyCharacter`` and ``allowUnquotedControlChars``
+reads them once each bare ``None`` value is rewritten to ``null``. That
+rewrite is a regex, so it is exact only on cells whose layout is known.
 
-The reference ``eval()``s the cells row-by-row (`loader.py:146,:154,:175,
-:197,:207,:258,:270,:302`); here an Arrow-batched pandas UDF wraps
-``ast.literal_eval`` (never ``eval`` — deviation D3) with the same
-is-valid-string guard semantics (`loader.py:31-34`): non-string/empty cells
-parse to NULL.
+**The guard** (``Shape.guard``) is a whole-cell match of the canonical
+``repr`` of a ``list[dict[str, int | str | None]]`` (or of the single dict
+of ``belongs_to_collection``), with separators exactly ``', '`` and
+``': '`` and nothing after the closing bracket. Typed keys must hold their
+type or ``None``: ids at most 18 digits (so always int64), names plain
+strings. Strings hold no backslash and no control character, so no escape
+has to be translated. Keys are single-quoted runs of 1-64 word
+characters, and a double-quoted string holds no ``': ``, so the only
+``'<key>': None`` and ``'job': `` texts are a key and its value (a value
+string is followed by ``, `` or ``}``, never by ``: ``), which the rewrite
+turns into ``null`` and into a ``has_job`` marker. Any other key may hold
+any of the three value kinds; ``from_json`` skips it, as the reference's
+``.get`` ignores it.
+
+**The fallback.** A non-empty cell the guard rejects goes to one Arrow
+``pandas_udf`` per input table, whatever its number of nested columns: each
+column's argument is the raw cell where the guard failed and NULL
+elsewhere, so only those cells reach Python. There the reference's
+``eval()`` (`loader.py:146,:154,:175,:197,:207,:258,:270,:302`) is
+``ast.literal_eval`` (never ``eval`` — deviation D3), with the same
+is-valid-string semantics (`loader.py:31-34`): a non-string, empty or
+unparsable cell is NULL. The parsed value is written back as JSON in the
+column's own schema, so both branches end in the same ``from_json``.
+Cells that ``from_json`` would read differently from ``literal_eval``
+without failing — float or string ids (``12.0``, ``'12'``), Python escapes
+(``'caf\\xe9'``), trailing text, a list with a non-dict element — all fail
+the guard.
 """
 
 from __future__ import annotations
 
 import ast
+import json
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import Column, functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
+    DataType,
     LongType,
     StringType,
     StructField,
@@ -56,104 +78,174 @@ CAST_MEMBER = StructType(
     ]
 )
 
+_JSON_OPTIONS = {
+    "allowSingleQuotes": "true",
+    "allowBackslashEscapingAnyCharacter": "true",
+    "allowUnquotedControlChars": "true",
+}
+
+# Java regex pieces of the guard. Every quantifier is possessive: no
+# backtracking, and a repeated group loops instead of recursing, so a
+# cell of any length is matched in one pass without growing the stack.
+_INT = r"-?+(?:0|[1-9][0-9]{0,17}+)"
+_SQ_BODY = r"[^'\\\x00-\x1f\x7f]*+"
+_SQ = f"'{_SQ_BODY}'"
+_DQ = r'"(?:[^"' + r"'\\\x00-\x1f\x7f]|'(?!: ))*+" + '"'
+_STR = f"(?:{_SQ}|{_DQ})"
+# Keys are word characters, so text of the form 'key': can only be a key.
+_KEY = "[A-Za-z0-9_]{1,64}"
+
+
+@dataclass(frozen=True)
+class Shape:
+    """One nested-cell layout: a list of dicts, or one dict
+    (``is_list=False``), read into ``struct``. A LongType field is an
+    int-valued key, a StringType field a string-valued key, and a
+    BooleanType field ``has_<key>`` records whether ``<key>`` is present
+    (crew's ``"job" in d``, `loader.py:259`)."""
+
+    struct: StructType
+    is_list: bool = True
+
+    def _keys(self, kind: type) -> list[str]:
+        return [f.name for f in self.struct.fields if isinstance(f.dataType, kind)]
+
+    @property
+    def presence(self) -> list[str]:
+        return [k.removeprefix("has_") for k in self._keys(BooleanType)]
+
+    @property
+    def dtype(self) -> DataType:
+        return ArrayType(self.struct) if self.is_list else self.struct
+
+    @property
+    def guard(self) -> str:
+        reserved = "|".join(self.struct.fieldNames())
+        entry = "|".join(
+            [f"'{k}': (?:{_INT}|None)" for k in self._keys(LongType)]
+            + [f"'{k}': (?:{_STR}|None)" for k in self._keys(StringType)]
+            + [f"'(?!(?:{reserved})'){_KEY}+': (?:{_INT}|{_STR}|None)"]
+        )
+        # an item is followed by ", " and the next item, or by the close
+        d = f"\\{{(?:(?:{entry})(?:, (?=')|(?=\\}})))*+\\}}"
+        body = f"\\[(?:{d}(?:, (?=\\{{)|(?=\\])))*+\\]" if self.is_list else d
+        return f"\\A{body}\\z"
+
+    def to_json(self, raw: Column) -> Column:
+        """The exact rewrite of a guarded cell: bare ``None`` → ``null``,
+        and a ``has_<key>`` marker before each presence key."""
+        # the literal comes first, so the lookbehind runs only where it matched
+        out = F.regexp_replace(raw, f"None(?<='{_KEY}': None)(?=[,}}])", "null")
+        for k in self.presence:
+            out = F.regexp_replace(out, f"'{k}': ", f"'has_{k}': true, '{k}': ")
+        return out
+
+    def finish(self, parsed: Column) -> Column:
+        """A presence flag the rewrite did not set is False, not NULL."""
+        for k in self.presence:
+            parsed = F.transform(parsed, _default_false(f"has_{k}"))
+        return parsed
+
+    def row(self, d: dict) -> dict:
+        out = {k: _to_long(d.get(k)) for k in self._keys(LongType)}
+        out.update((k, _norm_str(d.get(k))) for k in self._keys(StringType))
+        out.update((f"has_{k}", k in d) for k in self.presence)
+        return out
+
+    def literal_json(self, cell) -> str | None:
+        """The fallback: ``literal_eval`` the cell, keep what the reference
+        keeps, and write it as JSON in this shape."""
+        parsed = _literal(cell)
+        if self.is_list and isinstance(parsed, list):
+            return json.dumps([self.row(d) for d in parsed if isinstance(d, dict)])
+        if not self.is_list and isinstance(parsed, dict):
+            return json.dumps(self.row(parsed))
+        return None
+
+
+def _default_false(field: str):
+    return lambda e: e.withField(field, F.coalesce(e[field], F.lit(False)))
+
+
+ID_NAMES = Shape(ID_NAME)
+LANGS = Shape(ISO_LANG)
+COUNTRIES = Shape(ISO_COUNTRY)
+CREW = Shape(CREW_MEMBER)
+CAST = Shape(CAST_MEMBER)
+COLLECTION = Shape(ID_NAME, is_list=False)
+
 
 def _literal(cell) -> object | None:
     """Guarded ``ast.literal_eval`` mirroring ``is_valid_str`` + the
-    reference's implicit crash-tolerance: anything unparsable → None."""
+    reference's implicit crash-tolerance: anything unparsable → None
+    (unhashable dict keys, parser stack exhaustion and deep nesting
+    included)."""
     if not isinstance(cell, str) or len(cell) == 0:
         return None
     try:
         return ast.literal_eval(cell)
-    except (ValueError, SyntaxError):
+    except (ValueError, SyntaxError, TypeError, MemoryError, RecursionError):
         return None
+
+
+_INT64 = range(-(2**63), 2**63)
 
 
 def _to_long(v) -> int | None:
+    """``int(v)`` when it fits a LongType; NULL otherwise (``inf``, NaN,
+    junk strings, magnitudes beyond int64)."""
     try:
-        return int(v)
-    except (TypeError, ValueError):
+        n = int(v)
+    except (TypeError, ValueError, OverflowError):
         return None
-
-
-def _row_id_name(d: dict) -> dict:
-    return {"id": _to_long(d.get("id")), "name": _norm_str(d.get("name"))}
+    return n if n in _INT64 else None
 
 
 def _norm_str(v) -> str | None:
     return v if isinstance(v, str) else (None if v is None else str(v))
 
 
-def _array_parser(row_fn):
-    def parse(cells: pd.Series) -> pd.Series:
-        out = []
-        for cell in cells:
-            parsed = _literal(cell)
-            if isinstance(parsed, list):
-                out.append([row_fn(d) for d in parsed if isinstance(d, dict)])
-            else:
-                out.append(None)
-        return pd.Series(out, dtype="object")
+def _fallback_udf(shapes: tuple[Shape, ...]):
+    """One Arrow UDF for all of a table's nested columns: argument ``i`` is
+    column ``i``'s cell where the guard failed and NULL elsewhere, and the
+    result's field ``f{i}`` is that cell's JSON (NULL for NULL)."""
+    out = StructType([StructField(f"f{i}", StringType()) for i in range(len(shapes))])
 
-    return parse
+    def parse(*cells: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame(
+            {
+                f"f{i}": [shape.literal_json(c) for c in col]
+                for i, (shape, col) in enumerate(zip(shapes, cells))
+            }
+        )
 
-
-parse_id_name_array = F.pandas_udf(_array_parser(_row_id_name), ArrayType(ID_NAME))
-
-parse_lang_array = F.pandas_udf(
-    _array_parser(
-        lambda d: {"iso_639_1": _norm_str(d.get("iso_639_1")), "name": _norm_str(d.get("name"))}
-    ),
-    ArrayType(ISO_LANG),
-)
-
-parse_country_array = F.pandas_udf(
-    _array_parser(
-        lambda d: {
-            "iso_3166_1": _norm_str(d.get("iso_3166_1")),
-            "name": _norm_str(d.get("name")),
-        }
-    ),
-    ArrayType(ISO_COUNTRY),
-)
-
-parse_crew_array = F.pandas_udf(
-    _array_parser(
-        lambda d: {
-            "id": _to_long(d.get("id")),
-            "name": _norm_str(d.get("name")),
-            "job": _norm_str(d.get("job")),
-            "has_job": "job" in d,
-        }
-    ),
-    ArrayType(CREW_MEMBER),
-)
-
-parse_cast_array = F.pandas_udf(
-    _array_parser(
-        lambda d: {
-            "id": _to_long(d.get("id")),
-            "name": _norm_str(d.get("name")),
-            "order": _to_long(d.get("order")),
-        }
-    ),
-    ArrayType(CAST_MEMBER),
-)
+    return F.pandas_udf(parse, out)
 
 
-@F.pandas_udf(ID_NAME)
-def parse_collection(cells: pd.Series) -> pd.DataFrame:
-    """``belongs_to_collection`` is a single dict, not a list
-    (`loader.py:152-159`)."""
-    ids, names = [], []
-    for cell in cells:
-        parsed = _literal(cell)
-        if isinstance(parsed, dict):
-            ids.append(_to_long(parsed.get("id")))
-            names.append(_norm_str(parsed.get("name")))
-        else:
-            ids.append(None)
-            names.append(None)
-    return pd.DataFrame({"id": pd.array(ids, dtype="Int64"), "name": names})
+def _parse(cells: list[tuple[str | Column, Shape]]) -> list[Column]:
+    raws = [F.col(c) if isinstance(c, str) else c for c, _ in cells]
+    shapes = tuple(shape for _, shape in cells)
+    flagged = [
+        (F.length(raw) > 0) & ~raw.rlike(shape.guard) for raw, shape in zip(raws, shapes)
+    ]
+    fb = _fallback_udf(shapes)(*[F.when(f, raw) for f, raw in zip(flagged, raws)])
+    out = []
+    for i, (raw, shape, f) in enumerate(zip(raws, shapes, flagged)):
+        json_text = F.when(f, fb[f"f{i}"]).otherwise(shape.to_json(raw))
+        out.append(shape.finish(F.from_json(json_text, shape.dtype, _JSON_OPTIONS)))
+    return out
+
+
+def parse_nested(**cells: tuple[str | Column, Shape]) -> list[Column]:
+    """Parse one input table's nested columns, ``alias=(raw column,
+    shape)``: native ``from_json`` where the guard matches, one shared
+    ``literal_eval`` UDF for the other non-empty cells."""
+    return [c.alias(a) for a, c in zip(cells, _parse(list(cells.values())))]
+
+
+def parse_id_name_array(col: str | Column) -> Column:
+    """A single id/name array column (keywords)."""
+    return _parse([(col, ID_NAMES)])[0]
 
 
 def positive_bigint_or_null(col: Column) -> Column:

@@ -22,8 +22,10 @@ order" is not a meaningful total order anyway).
 
 Deviations (SURVEY.md §7.5): D1 surrogate ids dense_rank over natural key;
 D2 missing overview → NULL (not the ``str(NaN)`` artifact ``'nan'``);
-D3 ``ast.literal_eval`` not ``eval``; null iso codes / entity ids are
-dropped rather than registered under a NULL key.
+D3 nested cells are read by ``from_json``, and ``ast.literal_eval`` (never
+``eval``) runs only on the fallback cells, those outside the canonical repr
+grammar that ``etl/parse.py``'s guard accepts; null iso codes / entity ids
+are dropped rather than registered under a NULL key.
 """
 
 from __future__ import annotations
@@ -34,12 +36,14 @@ from pyspark.sql.types import StringType, StructField, StructType
 from ..session import tracked_cache
 from ..sources.readers import scan_csv
 from .parse import (
-    parse_cast_array,
-    parse_collection,
-    parse_country_array,
-    parse_crew_array,
+    CAST,
+    COLLECTION,
+    COUNTRIES,
+    CREW,
+    ID_NAMES,
+    LANGS,
     parse_id_name_array,
-    parse_lang_array,
+    parse_nested,
     positive_bigint_or_null,
     positive_double_or_null,
     positive_int_trunc_or_null,
@@ -128,11 +132,13 @@ def build_movie_tables(movies_raw: DataFrame) -> dict[str, DataFrame]:
         "runtime",
         "overview",
         "original_language",
-        parse_id_name_array("genres").alias("genres_arr"),
-        parse_collection("belongs_to_collection").alias("collection"),
-        parse_lang_array("spoken_languages").alias("spoken_arr"),
-        parse_id_name_array("production_companies").alias("companies_arr"),
-        parse_country_array("production_countries").alias("countries_arr"),
+        *parse_nested(
+            genres_arr=("genres", ID_NAMES),
+            collection=("belongs_to_collection", COLLECTION),
+            spoken_arr=("spoken_languages", LANGS),
+            companies_arr=("production_companies", ID_NAMES),
+            countries_arr=("production_countries", COUNTRIES),
+        ),
     )
     tracked_cache(parsed)  # shared by every derivation below
 
@@ -287,8 +293,7 @@ def build_credit_tables(credits_raw: DataFrame) -> dict[str, DataFrame]:
     parsed = cr.select(
         "movie_id",
         "_idx",
-        parse_crew_array("crew").alias("crew_arr"),
-        parse_cast_array("cast").alias("cast_arr"),
+        *parse_nested(crew_arr=("crew", CREW), cast_arr=("cast", CAST)),
     )
     tracked_cache(parsed)
 

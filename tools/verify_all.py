@@ -13,10 +13,11 @@ leak into the next gate):
 4. pytest perfbench/test_smoke.py        (the declared benchmark still runs)
 5. perfbench iterative, traced           (PageRank, pipeline, MinHash savings:
                                           digests match, no pinned RDD left)
-6. bench.py                              (frozen 16-query headline)
-7. bench.py --set tag:ext                (the extension series)
+6. perfbench etl                         (every ETL table's digest matches)
+7. bench.py                              (frozen 16-query headline)
+8. bench.py --set tag:ext                (the extension series)
 
---fast skips 6-7 (the timing gates) for a correctness-only pass.
+--fast skips 7-8 (the timing gates) for a correctness-only pass.
 Prints one JSON summary line and exits non-zero if any gate fails.
 """
 
@@ -31,18 +32,24 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def iterative_ok(stdout: str) -> bool:
+def perfbench_ok(stdout: str, zero: tuple[str, ...] = ()) -> bool:
     """perfbench exits 0 even when a digest mismatches, so read its result
-    line: every output correct and no RDD left pinned after the run."""
+    line: every output correct, and each metric named in ``zero`` at 0."""
     lines = stdout.strip().splitlines()
     if not lines:
         return False
     try:
         res = json.loads(lines[-1])
-        pinned = res["metrics"]["session.pinned_rdds_after"]["value"]
+        held = [res["metrics"][k]["value"] for k in zero]
     except (ValueError, KeyError, TypeError):
         return False
-    return res.get("correct") is True and pinned == 0
+    return res.get("correct") is True and all(v == 0 for v in held)
+
+
+def perfbench_gate(workload: str, trace: int, zero: tuple[str, ...] = ()) -> tuple:
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", "1"]
+    cmd += ["--seconds", "1", "--trace", str(trace)]
+    return (f"perfbench_{workload}", cmd, None, lambda out: perfbench_ok(out, zero))
 
 
 def run(name: str, cmd: list[str], env: dict | None = None, check=None) -> dict:
@@ -85,13 +92,9 @@ def main() -> int:
             {"SPARK_GRAFT_VANILLA": "1"},
         ),
         ("perfbench_smoke", [py, "-m", "pytest", "perfbench/test_smoke.py", "-q"], None),
-        (
-            "perfbench_iterative",
-            [py, "perfbench/run.py", "--workload", "iterative", "--seed", "1"]
-            + ["--seconds", "1", "--trace", "1"],
-            None,
-            iterative_ok,
-        ),
+        # no RDD may stay pinned after the iterative operators' run
+        perfbench_gate("iterative", 1, zero=("session.pinned_rdds_after",)),
+        perfbench_gate("etl", 0),
     ]
     if not fast:
         gates += [
