@@ -293,8 +293,12 @@ def text_list(draw):
 trailing_text = st.sampled_from([" trailing", "\n", " ", "]", ", 5"])
 
 
+def canonical_cell(is_list: bool):
+    return (py_list if is_list else py_dict).map(repr)
+
+
 def nested_cell(is_list: bool):
-    canonical = (py_list if is_list else py_dict).map(repr)
+    canonical = canonical_cell(is_list)
     kinds = [
         st.none(),
         st.sampled_from(["", " ", "not a literal [", "[", "{}", "[]"]),
@@ -315,8 +319,13 @@ def test_native_or_fallback_parse_matches_literal_eval_path(spark, data):
     literal_eval path, row for row: the guard must route every cell that
     from_json would read differently (float or string ids, Python escapes,
     trailing text, non-dict elements, ids beyond int64, ...) to the
-    fallback, and the None / has_job rewrites must be exact on the rest."""
+    fallback, and the None / has_job rewrites must be exact on the rest,
+    with or without a fallback cell in the table."""
     import json
+    import operator
+    from functools import reduce
+
+    from tools.plan_manifest import plan_counts
 
     from the_movie_database_import_spark.etl.parse import (
         CAST,
@@ -338,11 +347,32 @@ def test_native_or_fallback_parse_matches_literal_eval_path(spark, data):
             min_size=20,
             max_size=60,
         )
+    ) + data.draw(
+        st.lists(
+            st.tuples(*[canonical_cell(s.is_list) for s in shapes.values()]),
+            min_size=5,
+            max_size=10,
+        )
     )
-    df = spark.createDataFrame(rows, ", ".join(f"{n} string" for n in shapes))
-    got = df.select(*parse_nested(**{n: (n, s) for n, s in shapes.items()})).collect()
-    for row, out in zip(rows, got):
-        for (n, shape), cell in zip(shapes.items(), row):
+    df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)], "i int, " + ", ".join(f"{n} string" for n in shapes)
+    )
+    # the rows whose every cell the guard accepts (or that are empty or
+    # NULL): their parse must plan no Python at all
+    accepted = df.filter(
+        reduce(
+            operator.and_,
+            [
+                F.coalesce((F.length(n) == 0) | F.col(n).rlike(s.guard), F.lit(True))
+                for n, s in shapes.items()
+            ],
+        )
+    )
+    cells = {n: (n, s) for n, s in shapes.items()}
+    native = parse_nested(accepted, ["i"], **cells)
+    assert plan_counts(native)["python_eval"] == 0
+    for out in [*parse_nested(df, ["i"], **cells).collect(), *native.collect()]:
+        for (n, shape), cell in zip(shapes.items(), rows[out.i]):
             want = shape.literal_json(cell)
             want = None if want is None else json.loads(want)
             g = out[n]

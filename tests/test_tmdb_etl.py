@@ -223,12 +223,15 @@ def test_crew_by_job_map(tables):
 
 def test_parse_selects_are_native_with_one_python_udf(spark, tmdb_dir):
     """Each input table's parse (the three caches `build_all_tables`
-    registers) runs `from_json` and at most one Python UDF in at most one
-    Python eval node, whatever its number of nested columns: a return to a
-    UDF per column fails here."""
+    registers) runs `from_json`, and no Python on the fixture, whose cells
+    are all in the canonical repr grammar. A table holding a cell outside
+    it gets one Python UDF in one Python eval node, whatever its number of
+    nested columns: a return to a UDF per column, or to a Python stage on
+    every input, fails here."""
     import re
 
     from the_movie_database_import_spark import session
+    from the_movie_database_import_spark.etl.parse import CAST, CREW, parse_nested
     from tools.plan_manifest import plan_counts
 
     n0 = len(session._TRACKED)
@@ -238,16 +241,29 @@ def test_parse_selects_are_native_with_one_python_udf(spark, tmdb_dir):
         table: df
         for df in caches
         for table, col in (
-            ("movies", "genres_arr"), ("credits", "crew_arr"), ("keywords", "keyword_id")
+            ("movies", "genres_arr"), ("credits", "crew_arr"), ("keywords", "keywords_arr")
         )
         if col in df.columns
     }
     assert len(caches) == len(by_input) == 3
     for table, df in by_input.items():
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "from_json(" in plan, table
-        assert plan_counts(df)["python_eval"] <= 1, table
-        assert len(set(re.findall(r"pythonUDF\d+", plan))) <= 1, table
+        assert "from_json(" in df._jdf.queryExecution().executedPlan().toString(), table
+        assert plan_counts(df)["python_eval"] == 0, table
+
+    cells = [("[{'id': 1, 'name': 'a', 'job': 'x'}]", "[{'id': 2.0, 'name': 'b'}]")]
+    df = parse_nested(
+        spark.createDataFrame(cells, "crew string, cast string"),
+        [],
+        crew_arr=("crew", CREW),
+        cast_arr=("cast", CAST),
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "from_json(" in plan
+    assert plan_counts(df)["python_eval"] == 1
+    assert len(set(re.findall(r"pythonUDF\d+", plan))) == 1
+    row = df.first()
+    assert [(e.id, e.name, e.job, e.has_job) for e in row.crew_arr] == [(1, "a", "x", True)]
+    assert [(e.id, e.name, e.order) for e in row.cast_arr] == [(2, "b", None)]
 
 
 # Cells that raised inside the literal_eval path and failed the whole job:
@@ -263,9 +279,9 @@ CRASH_LIST_CELLS = [
 
 
 def test_malformed_cells_parse_to_null_in_every_parser(spark):
-    """Every shape's parse turns each crash cell into NULL — the whole cell
-    where it does not evaluate, the out-of-range id where it does — and the
-    job survives."""
+    """Every shape's parse, and the literal_eval path alone, turns each
+    crash cell into NULL — the whole cell where it does not evaluate, the
+    out-of-range id where it does — and the job survives."""
     from the_movie_database_import_spark.etl.parse import (
         CAST,
         COLLECTION,
@@ -273,6 +289,7 @@ def test_malformed_cells_parse_to_null_in_every_parser(spark):
         CREW,
         ID_NAMES,
         LANGS,
+        parse_id_name_array,
         parse_nested,
     )
 
@@ -281,18 +298,22 @@ def test_malformed_cells_parse_to_null_in_every_parser(spark):
         "crew": CREW, "cast": CAST, "collection": COLLECTION,
     }
     rows = [
-        (c, c if i == 1 else c[1:-1]) for i, c in enumerate(CRASH_LIST_CELLS)
+        (i, c, c if i == 1 else c[1:-1]) for i, c in enumerate(CRASH_LIST_CELLS)
     ]
-    df = spark.createDataFrame(rows, "l string, d string")
-    got = df.select(
-        *parse_nested(
-            **{n: ("d" if s is COLLECTION else "l", s) for n, s in shapes.items()}
+    df = spark.createDataFrame(rows, "i int, l string, d string")
+    got = (
+        parse_nested(
+            df.withColumn("literal_path", parse_id_name_array("l")),
+            ["i", "literal_path"],
+            **{n: ("d" if s is COLLECTION else "l", s) for n, s in shapes.items()},
         )
-    ).collect()
+        .orderBy("i")
+        .collect()
+    )
     for r in got[:2]:
-        assert all(r[n] is None for n in shapes), r
+        assert all(r[n] is None for n in [*shapes, "literal_path"]), r
     for r in got[2:]:
-        for n in ("ids", "crew", "cast"):
+        for n in ("ids", "crew", "cast", "literal_path"):
             assert [(e.id, e.name) for e in r[n]] == [(None, "x")], (n, r)
         assert [e.order for e in r.cast] == [None]
         assert [e.has_job for e in r.crew] == [False]

@@ -3,10 +3,9 @@ for every cell in the canonical repr grammar, ``ast.literal_eval`` for the
 rest.
 
 TMDB CSV cells hold ``repr()`` of Python objects — single quotes, ``None``,
-apostrophes inside names. ``from_json`` with ``allowSingleQuotes``,
-``allowBackslashEscapingAnyCharacter`` and ``allowUnquotedControlChars``
-reads them once each bare ``None`` value is rewritten to ``null``. That
-rewrite is a regex, so it is exact only on cells whose layout is known.
+apostrophes inside names. ``from_json`` with ``allowSingleQuotes`` reads
+them once each bare ``None`` value is rewritten to ``null``. That rewrite
+is a regex, so it is exact only on cells whose layout is known.
 
 **The guard** (``Shape.guard``) is a whole-cell match of the canonical
 ``repr`` of a ``list[dict[str, int | str | None]]`` (or of the single dict
@@ -22,29 +21,34 @@ turns into ``null`` and into a ``has_job`` marker. Any other key may hold
 any of the three value kinds; ``from_json`` skips it, as the reference's
 ``.get`` ignores it.
 
-**The fallback.** A non-empty cell the guard rejects goes to one Arrow
-``pandas_udf`` per input table, whatever its number of nested columns: each
-column's argument is the raw cell where the guard failed and NULL
-elsewhere, so only those cells reach Python. There the reference's
-``eval()`` (`loader.py:146,:154,:175,:197,:207,:258,:270,:302`) is
+**The fallback.** ``parse_nested`` caches each input table's parse with
+every cell the guard rejected kept raw, and looks for such a cell while it
+fills the cache. Only when one exists does it add one Arrow ``pandas_udf``
+over the cached rows, whatever the table's number of nested columns; each
+column's argument is NULL wherever the guard accepted the cell, so only
+rejected cells reach Python. An input with none runs no Python at all.
+There the reference's ``eval()``
+(`loader.py:146,:154,:175,:197,:207,:258,:270,:302`) is
 ``ast.literal_eval`` (never ``eval`` — deviation D3), with the same
 is-valid-string semantics (`loader.py:31-34`): a non-string, empty or
-unparsable cell is NULL. The parsed value is written back as JSON in the
-column's own schema, so both branches end in the same ``from_json``.
-Cells that ``from_json`` would read differently from ``literal_eval``
-without failing — float or string ids (``12.0``, ``'12'``), Python escapes
-(``'caf\\xe9'``), trailing text, a list with a non-dict element — all fail
-the guard.
+unparsable cell is NULL. The parsed value is written back as standard
+JSON in the column's own schema, so both branches end in the same
+``from_json``. Cells that ``from_json`` would read differently from
+``literal_eval`` without failing — float or string ids (``12.0``,
+``'12'``), Python escapes (``'caf\\xe9'``), trailing text, a list with a
+non-dict element — all fail the guard.
 """
 
 from __future__ import annotations
 
 import ast
 import json
+import operator
 from dataclasses import dataclass
+from functools import reduce
 
 import pandas as pd
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -54,6 +58,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..session import tracked_cache
 
 ID_NAME = StructType([StructField("id", LongType()), StructField("name", StringType())])
 ISO_LANG = StructType(
@@ -78,11 +84,7 @@ CAST_MEMBER = StructType(
     ]
 )
 
-_JSON_OPTIONS = {
-    "allowSingleQuotes": "true",
-    "allowBackslashEscapingAnyCharacter": "true",
-    "allowUnquotedControlChars": "true",
-}
+_JSON_OPTIONS = {"allowSingleQuotes": "true"}
 
 # Java regex pieces of the guard. Every quantifier is possessive: no
 # backtracking, and a repeated group loops instead of recursing, so a
@@ -140,8 +142,10 @@ class Shape:
             out = F.regexp_replace(out, f"'{k}': ", f"'has_{k}': true, '{k}': ")
         return out
 
-    def finish(self, parsed: Column) -> Column:
-        """A presence flag the rewrite did not set is False, not NULL."""
+    def read(self, json_text: Column) -> Column:
+        """``from_json`` into this shape; a presence flag the rewrite did
+        not set is False, not NULL."""
+        parsed = F.from_json(json_text, self.dtype, _JSON_OPTIONS)
         for k in self.presence:
             parsed = F.transform(parsed, _default_false(f"has_{k}"))
         return parsed
@@ -222,30 +226,54 @@ def _fallback_udf(shapes: tuple[Shape, ...]):
     return F.pandas_udf(parse, out)
 
 
-def _parse(cells: list[tuple[str | Column, Shape]]) -> list[Column]:
-    raws = [F.col(c) if isinstance(c, str) else c for c, _ in cells]
-    shapes = tuple(shape for _, shape in cells)
-    flagged = [
-        (F.length(raw) > 0) & ~raw.rlike(shape.guard) for raw, shape in zip(raws, shapes)
-    ]
-    fb = _fallback_udf(shapes)(*[F.when(f, raw) for f, raw in zip(flagged, raws)])
-    out = []
-    for i, (raw, shape, f) in enumerate(zip(raws, shapes, flagged)):
-        json_text = F.when(f, fb[f"f{i}"]).otherwise(shape.to_json(raw))
-        out.append(shape.finish(F.from_json(json_text, shape.dtype, _JSON_OPTIONS)))
-    return out
-
-
-def parse_nested(**cells: tuple[str | Column, Shape]) -> list[Column]:
-    """Parse one input table's nested columns, ``alias=(raw column,
-    shape)``: native ``from_json`` where the guard matches, one shared
-    ``literal_eval`` UDF for the other non-empty cells."""
-    return [c.alias(a) for a, c in zip(cells, _parse(list(cells.values())))]
+def parse_nested(df: DataFrame, keep: list[str], **cells: tuple[str, Shape]) -> DataFrame:
+    """``keep`` plus one parsed column per ``alias=(raw column, shape)``,
+    cached and tracked. The guard runs once per cell; cells it accepts are
+    read natively, and the fallback UDF is planned only when the filled
+    cache holds a non-empty cell the guard rejected."""
+    shapes = tuple(shape for _, shape in cells.values())
+    raws = [f"_raw{i}" for i in range(len(shapes))]
+    flagged = [f"_flagged{i}" for i in range(len(shapes))]
+    step = df.select(
+        *keep,
+        *[F.col(c).alias(r) for r, (c, _) in zip(raws, cells.values())],
+        *[
+            ((F.length(c) > 0) & ~F.col(c).rlike(shape.guard)).alias(f)
+            for f, (c, shape) in zip(flagged, cells.values())
+        ],
+    )
+    # A second projection: Spark does not inline a non-trivial expression
+    # that is read twice, so each guard's result is computed once. A
+    # rejected cell is kept raw for the fallback; an accepted one is parsed.
+    staged = tracked_cache(
+        step.select(
+            *keep,
+            *[F.when(F.col(f), F.col(r)).alias(r) for r, f in zip(raws, flagged)],
+            *[
+                F.when(~F.col(f), shape.read(shape.to_json(F.col(r)))).alias(a)
+                for a, r, f, shape in zip(cells, raws, flagged, shapes)
+            ],
+        )
+    )
+    # the probe fills the cache, which the first write would fill anyway
+    if staged.filter(reduce(operator.or_, [F.col(r).isNotNull() for r in raws])).isEmpty():
+        return staged.select(*keep, *cells)
+    fb = _fallback_udf(shapes)(*raws)
+    return tracked_cache(
+        staged.select(
+            *keep,
+            *[
+                F.when(F.col(r).isNull(), F.col(a)).otherwise(shape.read(fb[f"f{i}"])).alias(a)
+                for i, (a, r, shape) in enumerate(zip(cells, raws, shapes))
+            ],
+        )
+    )
 
 
 def parse_id_name_array(col: str | Column) -> Column:
-    """A single id/name array column (keywords)."""
-    return _parse([(col, ID_NAMES)])[0]
+    """The ``literal_eval`` path alone over one id/name array column: the
+    fallback the native parse must agree with."""
+    return ID_NAMES.read(_fallback_udf((ID_NAMES,))(col)["f0"])
 
 
 def positive_bigint_or_null(col: Column) -> Column:

@@ -24,16 +24,18 @@ Deviations (SURVEY.md §7.5): D1 surrogate ids dense_rank over natural key;
 D2 missing overview → NULL (not the ``str(NaN)`` artifact ``'nan'``);
 D3 nested cells are read by ``from_json``, and ``ast.literal_eval`` (never
 ``eval``) runs only on the fallback cells, those outside the canonical repr
-grammar that ``etl/parse.py``'s guard accepts; null iso codes / entity ids
+grammar that ``etl/parse.py``'s guard accepts, in a Python stage planned
+only when an input table holds such a cell; null iso codes / entity ids
 are dropped rather than registered under a NULL key.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from ..session import tracked_cache
 from ..sources.readers import scan_csv
 from .parse import (
     CAST,
@@ -42,7 +44,6 @@ from .parse import (
     CREW,
     ID_NAMES,
     LANGS,
-    parse_id_name_array,
     parse_nested,
     positive_bigint_or_null,
     positive_double_or_null,
@@ -121,26 +122,26 @@ def _valid_id(df: DataFrame, src_col: str, out_col: str) -> DataFrame:
 
 def build_movie_tables(movies_raw: DataFrame) -> dict[str, DataFrame]:
     mv = _valid_id(movies_raw, "id", "movie_id")
-    parsed = mv.select(
-        "movie_id",
-        "_idx",
-        "original_title",
-        "release_date",
-        "budget",
-        "popularity",
-        "revenue",
-        "runtime",
-        "overview",
-        "original_language",
-        *parse_nested(
-            genres_arr=("genres", ID_NAMES),
-            collection=("belongs_to_collection", COLLECTION),
-            spoken_arr=("spoken_languages", LANGS),
-            companies_arr=("production_companies", ID_NAMES),
-            countries_arr=("production_countries", COUNTRIES),
-        ),
+    parsed = parse_nested(  # cached, shared by every derivation below
+        mv,
+        [
+            "movie_id",
+            "_idx",
+            "original_title",
+            "release_date",
+            "budget",
+            "popularity",
+            "revenue",
+            "runtime",
+            "overview",
+            "original_language",
+        ],
+        genres_arr=("genres", ID_NAMES),
+        collection=("belongs_to_collection", COLLECTION),
+        spoken_arr=("spoken_languages", LANGS),
+        companies_arr=("production_companies", ID_NAMES),
+        countries_arr=("production_countries", COUNTRIES),
     )
-    tracked_cache(parsed)  # shared by every derivation below
 
     last = (
         parsed.withColumn(
@@ -290,12 +291,9 @@ def build_movie_tables(movies_raw: DataFrame) -> dict[str, DataFrame]:
 
 def build_credit_tables(credits_raw: DataFrame) -> dict[str, DataFrame]:
     cr = _valid_id(credits_raw, "id", "movie_id")
-    parsed = cr.select(
-        "movie_id",
-        "_idx",
-        *parse_nested(crew_arr=("crew", CREW), cast_arr=("cast", CAST)),
+    parsed = parse_nested(
+        cr, ["movie_id", "_idx"], crew_arr=("crew", CREW), cast_arr=("cast", CAST)
     )
-    tracked_cache(parsed)
 
     # person registry: ALL rows, crew (phase 0) before cast (phase 1) within
     # a row, first occurrence wins (`loader.py:264-265,:272-273`)
@@ -369,12 +367,12 @@ def build_credit_tables(credits_raw: DataFrame) -> dict[str, DataFrame]:
 
 def build_keyword_tables(keywords_raw: DataFrame) -> dict[str, DataFrame]:
     kw = _valid_id(keywords_raw, "id", "movie_id")
-    occ = kw.select(
-        "movie_id", "_idx", F.posexplode_outer(parse_id_name_array("keywords")).alias("_pos", "e")
+    parsed = parse_nested(kw, ["movie_id", "_idx"], keywords_arr=("keywords", ID_NAMES))
+    occ = parsed.select(
+        "movie_id", "_idx", F.posexplode_outer("keywords_arr").alias("_pos", "e")
     ).select(
         "movie_id", "_idx", "_pos", F.col("e.id").alias("keyword_id"), F.col("e.name").alias("name")
     ).filter(F.col("keyword_id").isNotNull())
-    tracked_cache(occ)
 
     keywords = (
         occ.withColumn(
@@ -416,9 +414,17 @@ def build_all_tables(
             raise ValueError("need base_dir or inputs")
         inputs = load_inputs(spark, base_dir)
 
-    out = build_movie_tables(inputs["movies"])
-    out.update(build_credit_tables(inputs["credits"]))
-    out.update(build_keyword_tables(inputs["keywords"]))
+    # Each builder fills its table's parse cache (one task per multiLine
+    # file) before it returns, so the three run side by side.
+    builders = [
+        (build_movie_tables, "movies"),
+        (build_credit_tables, "credits"),
+        (build_keyword_tables, "keywords"),
+    ]
+    out: dict[str, DataFrame] = {}
+    with ThreadPoolExecutor(len(builders)) as pool:
+        for tables in pool.map(lambda b: b[0](inputs[b[1]]), builders):
+            out.update(tables)
 
     rating_avg = build_rating_avg(inputs["ratings"])
     movies = out["movies"].join(
