@@ -266,6 +266,52 @@ def test_parse_selects_are_native_with_one_python_udf(spark, tmdb_dir):
     assert [(e.id, e.name, e.order) for e in row.cast_arr] == [(2, "b", None)]
 
 
+# Pre-execution plan-node counts of every table `build_all_tables` returns on
+# the fixture (the walk of `tools/plan_manifest.py`, which reads the parse
+# caches' plans too); counts left out are 0.
+ETL_PLAN_COUNTS = {
+    "movies": dict(exchange=5, broadcast_exchange=3, in_memory_scan=4,
+                   broadcast_hash_join=3, window=3, hash_aggregate=4),
+    "genres": dict(exchange=1, in_memory_scan=1, window=1),
+    "languages": dict(exchange=3, broadcast_exchange=1, in_memory_scan=3,
+                      broadcast_hash_join=1, window=2, hash_aggregate=2),
+    "collections": dict(exchange=1, in_memory_scan=1, window=1),
+    "countries": dict(exchange=3, broadcast_exchange=1, in_memory_scan=2,
+                      broadcast_hash_join=1, window=2, hash_aggregate=2),
+    "production_companies": dict(exchange=1, in_memory_scan=1, window=1),
+    "movies_genres": dict(exchange=1, in_memory_scan=1, window=1, hash_aggregate=2),
+    "spoken_languages": dict(exchange=4, broadcast_exchange=2, in_memory_scan=4,
+                             broadcast_hash_join=2, window=3, hash_aggregate=4),
+    "production_countries": dict(exchange=4, broadcast_exchange=2, in_memory_scan=3,
+                                 broadcast_hash_join=2, window=3, hash_aggregate=4),
+    "movies_production_companies": dict(exchange=1, in_memory_scan=1, window=1,
+                                        hash_aggregate=2),
+    "persons": dict(exchange=1, in_memory_scan=2, window=1),
+    "directors": dict(exchange=1, in_memory_scan=1, window=1, hash_aggregate=2),
+    "actors": dict(exchange=1, in_memory_scan=1, window=1),
+    "crew_by_job": dict(exchange=1, in_memory_scan=1, window=1),
+    "keywords": dict(exchange=1, in_memory_scan=1, window=1),
+    "movies_keywords": dict(exchange=1, in_memory_scan=1, hash_aggregate=2),
+}
+
+
+def test_etl_plan_shape_is_pinned(spark, tmdb_dir):
+    """Shuffles, broadcasts, cache scans, joins, windows and hash aggregates
+    of each of the 16 output tables stay as pinned: a second `distinct` in a
+    bridge, or a window or join added to a policy, fails here."""
+    from tools.plan_manifest import NODE_COLUMNS, plan_counts
+
+    nodes = {**NODE_COLUMNS, "Window": "window", "HashAggregate": "hash_aggregate"}
+    out = build_all_tables(spark, tmdb_dir)
+    assert set(out) == set(ETL_PLAN_COUNTS)
+    diffs = []
+    for name, df in out.items():
+        got = plan_counts(df, nodes)
+        want = {**dict.fromkeys(got, 0), **ETL_PLAN_COUNTS[name]}
+        diffs += [f"{name}.{c}: pinned {want[c]}, got {got[c]}" for c in got if got[c] != want[c]]
+    assert not diffs, diffs
+
+
 # Cells that raised inside the literal_eval path and failed the whole job:
 # an unhashable dict key (TypeError), parser stack exhaustion (MemoryError),
 # int(inf) (OverflowError) and an id beyond int64 (OverflowError in the

@@ -2,17 +2,23 @@
 normalized tables of ``db_schema.json`` (reference pipeline
 `loader.py:549-607`), re-expressed as declarative Spark plans.
 
-Conflict-policy parity (SURVEY.md §2 Part A notes, §7.5):
-- movies: duplicate id → LAST row wins (`loader.py:225`), via row_number
-  over input order descending;
+Conflict-policy parity (SURVEY.md §2 Part A notes, §7.5), one helper each:
+- movies: duplicate id → LAST row wins (`loader.py:225`): ``_first`` over
+  input order descending;
 - dimensions (genres/collections/companies/persons/keywords): FIRST
   occurrence registers the name (`loader.py:147-148,:155-158,:198-201,
-  :264-265,:272-273,:303-307`);
+  :264-265,:272-273,:303-307`): ``_first`` over ``_occurrences``, the
+  elements in reference processing order;
+- languages/countries: surrogate ids over the distinct codes, each named by
+  its first non-NULL name (ref A8/A9): ``_coded``;
+- movie bridges: per-movie SETS from the surviving row (ref A10):
+  ``_bridge``;
 - keywords→movies: duplicate keyword UNIONs its movie set
-  (`loader.py:308-309`) — distinct pairs across ALL rows;
-- crew/cast per movie: last duplicate credits row wins
-  (`loader.py:256-276`), while the person registry sees all rows, crew
-  before cast within a row (`loader.py:257-276`).
+  (`loader.py:308-309`) — distinct pairs across ALL ``_occurrences``;
+- crew/cast per movie: last NON-EMPTY duplicate credits row wins
+  (`loader.py:256-276`): ``_first`` over the rows with a crew job, or with
+  a cast, while the person registry sees all rows, crew before cast within
+  a row (`loader.py:257-276`).
 
 Input order: the reference iterates CSV file order. multiLine CSV files are
 unsplittable, so ``monotonically_increasing_id`` over the single-file scan
@@ -32,11 +38,13 @@ are dropped rather than registered under a NULL key.
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..sources.readers import scan_csv
+from ..sources.schema import TABLES, TABLES_BY_NAME
 from .parse import (
     CAST,
     COLLECTION,
@@ -68,12 +76,7 @@ CREDITS_SCHEMA = _str_schema("cast", "crew", "id")
 KEYWORDS_SCHEMA = _str_schema("id", "keywords")
 RATINGS_SCHEMA = _str_schema("userId", "movieId", "rating", "timestamp")
 
-OUTPUT_TABLES = (
-    "movies", "genres", "languages", "collections", "persons", "countries",
-    "production_companies", "keywords", "movies_genres", "spoken_languages",
-    "production_countries", "movies_production_companies", "movies_keywords",
-    "directors", "actors",
-)
+OUTPUT_TABLES = tuple(t.name for t in TABLES)
 
 
 def load_inputs(spark: SparkSession, base_dir: str) -> dict[str, DataFrame]:
@@ -120,6 +123,63 @@ def _valid_id(df: DataFrame, src_col: str, out_col: str) -> DataFrame:
     )
 
 
+def _first(df: DataFrame, key: str, *order) -> DataFrame:
+    """The first row of each ``key`` group in ``order``: ascending input
+    order for first-wins, ``F.col("_idx").desc()`` for last-wins."""
+    w = Window.partitionBy(key).orderBy(*order)
+    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+
+
+def _occurrences(parsed: DataFrame, arrays: list[str | Column], **fields: str) -> DataFrame:
+    """One row per element of the ``arrays`` columns, in reference
+    processing order: input row (``_idx``), then the column's place in
+    ``arrays`` (``_phase``), then position (``_pos``). A Column item is one
+    element per row (``_pos`` 0). ``fields`` maps each output column to the
+    element field it reads; the first is the key, and NULL keys are dropped."""
+    streams = [
+        parsed.select(
+            "movie_id", "_idx", F.lit(phase).alias("_phase"),
+            *([F.posexplode_outer(a).alias("_pos", "e")] if isinstance(a, str)
+              else [F.lit(0).alias("_pos"), a.alias("e")]),
+        ).select(
+            "movie_id", "_idx", "_phase", "_pos",
+            *(F.col(f"e.{f}").alias(out) for out, f in fields.items()),
+        )
+        for phase, a in enumerate(arrays)
+    ]
+    occ = reduce(DataFrame.unionByName, streams)
+    return occ.filter(F.col(next(iter(fields))).isNotNull())
+
+
+def _coded(occ: DataFrame, *order) -> DataFrame:
+    """Surrogate ids (D1: ``dense_rank`` over the distinct ``code`` values)
+    with each code's first non-NULL ``name`` in ``order`` (ref A8/A9)."""
+    names = _first(occ.filter(F.col("name").isNotNull()), "code", *order)
+    return (
+        occ.select("code")
+        .distinct()
+        .withColumn("id", F.dense_rank().over(Window.orderBy("code")).cast("bigint"))
+        .join(names.select("code", "name"), "code", "left")
+    )
+
+
+def _bridge(
+    rows: DataFrame, array: str, field: str, out: str, dim: DataFrame | None = None
+) -> DataFrame:
+    """The per-movie SET of the ``field`` values in ``rows``' ``array`` (ref
+    A10); with ``dim``, each value is a code mapped to the dimension's id."""
+    key = "code" if dim is not None else out
+    pairs = (
+        rows.select("movie_id", F.explode(array).alias("e"))
+        .select("movie_id", F.col(f"e.{field}").alias(key))
+        .filter(F.col(key).isNotNull())
+    )
+    if dim is not None:
+        ids = dim.select("code", F.col("id").alias(out))
+        pairs = pairs.join(F.broadcast(ids), "code").select("movie_id", out)
+    return pairs.distinct()
+
+
 def build_movie_tables(movies_raw: DataFrame) -> dict[str, DataFrame]:
     mv = _valid_id(movies_raw, "id", "movie_id")
     parsed = parse_nested(  # cached, shared by every derivation below
@@ -142,119 +202,23 @@ def build_movie_tables(movies_raw: DataFrame) -> dict[str, DataFrame]:
         companies_arr=("production_companies", ID_NAMES),
         countries_arr=("production_countries", COUNTRIES),
     )
+    last = _first(parsed, "movie_id", F.col("_idx").desc())
 
-    last = (
-        parsed.withColumn(
-            "_rn", F.row_number().over(Window.partitionBy("movie_id").orderBy(F.col("_idx").desc()))
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    def first_wins(array: str) -> DataFrame:  # ref A7
+        occ = _occurrences(parsed, [array], id="id", name="name")
+        return _first(occ, "id", "_idx", "_pos").select("id", "name")
 
-    # ---- simple dims: first occurrence registers the name (ref A7) -------
-    def first_wins_dim(arr_col: str) -> DataFrame:
-        occ = parsed.select("_idx", F.posexplode_outer(arr_col).alias("_pos", "e")).select(
-            "_idx", "_pos", F.col("e.id").alias("id"), F.col("e.name").alias("name")
-        ).filter(F.col("id").isNotNull())
-        w = Window.partitionBy("id").orderBy("_idx", "_pos")
-        return occ.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).select(
-            "id", "name"
-        )
-
-    genres = first_wins_dim("genres_arr")
-    companies = first_wins_dim("companies_arr")
-    collections = (
-        parsed.filter(F.col("collection.id").isNotNull())
-        .select("_idx", F.col("collection.id").alias("id"), F.col("collection.name").alias("name"))
-        .withColumn("_rn", F.row_number().over(Window.partitionBy("id").orderBy("_idx")))
-        .filter(F.col("_rn") == 1)
-        .select("id", "name")
+    # original_language (phase 0, `loader.py:161`, never named) before the
+    # spoken_languages list (phase 1, `loader.py:176`)
+    original = F.struct(
+        F.col("original_language").alias("iso_639_1"), F.lit(None).cast("string").alias("name")
     )
-
-    # ---- languages: surrogate keys + NULL-name fill-in (ref A8/A9) -------
-    # Occurrence stream in reference processing order: original_language
-    # (phase 0, `loader.py:161`) before the spoken_languages list (phase 1,
-    # `loader.py:176`), rows in input order.
-    orig_occ = parsed.select(
-        "_idx",
-        F.lit(0).alias("_phase"),
-        F.lit(0).alias("_pos"),
-        F.col("original_language").alias("iso"),
-        F.lit(None).cast("string").alias("name"),
+    languages = _coded(
+        _occurrences(parsed, [original, "spoken_arr"], code="iso_639_1", name="name"),
+        "_idx", "_phase", "_pos",
     )
-    spoken_occ = parsed.select(
-        "_idx", F.lit(1).alias("_phase"), F.posexplode_outer("spoken_arr").alias("_pos", "e")
-    ).select("_idx", "_phase", "_pos", F.col("e.iso_639_1").alias("iso"), F.col("e.name").alias("name"))
-    lang_occ = orig_occ.unionByName(spoken_occ).filter(F.col("iso").isNotNull())
-
-    lang_names = (
-        lang_occ.filter(F.col("name").isNotNull())
-        .withColumn(
-            "_rn",
-            F.row_number().over(Window.partitionBy("iso").orderBy("_idx", "_phase", "_pos")),
-        )
-        .filter(F.col("_rn") == 1)
-        .select("iso", "name")
-    )
-    languages = (
-        lang_occ.select("iso")
-        .distinct()
-        .withColumn("id", F.dense_rank().over(Window.orderBy("iso")).cast("bigint"))
-        .join(lang_names, "iso", "left")
-        .select("id", F.col("iso").alias("lang_key"), "name")
-    )
-
-    # ---- countries: surrogate keys, name first-wins (ref A8) -------------
-    country_occ = parsed.select(
-        "_idx", F.posexplode_outer("countries_arr").alias("_pos", "e")
-    ).select(
-        "_idx", "_pos", F.col("e.iso_3166_1").alias("iso"), F.col("e.name").alias("name")
-    ).filter(F.col("iso").isNotNull())
-    country_names = (
-        country_occ.filter(F.col("name").isNotNull())
-        .withColumn("_rn", F.row_number().over(Window.partitionBy("iso").orderBy("_idx", "_pos")))
-        .filter(F.col("_rn") == 1)
-        .select("iso", "name")
-    )
-    countries = (
-        country_occ.select("iso")
-        .distinct()
-        .withColumn("id", F.dense_rank().over(Window.orderBy("iso")).cast("bigint"))
-        .join(country_names, "iso", "left")
-        .select("id", F.col("iso").alias("code"), "name")
-    )
-
-    # ---- bridges: per-movie SET semantics from the surviving row (A10) ---
-    lang_ids = languages.select(F.col("lang_key").alias("iso"), F.col("id").alias("language_id"))
-    country_ids = countries.select(F.col("code").alias("iso"), F.col("id").alias("country_id"))
-
-    movies_genres = (
-        last.select("movie_id", F.explode("genres_arr").alias("e"))
-        .select("movie_id", F.col("e.id").alias("genre_id"))
-        .filter(F.col("genre_id").isNotNull())
-        .distinct()
-    )
-    movies_companies = (
-        last.select("movie_id", F.explode("companies_arr").alias("e"))
-        .select("movie_id", F.col("e.id").alias("production_company_id"))
-        .filter(F.col("production_company_id").isNotNull())
-        .distinct()
-    )
-    spoken_languages = (
-        last.select("movie_id", F.explode("spoken_arr").alias("e"))
-        .select("movie_id", F.col("e.iso_639_1").alias("iso"))
-        .filter(F.col("iso").isNotNull())
-        .join(F.broadcast(lang_ids), "iso")
-        .select("movie_id", "language_id")
-        .distinct()
-    )
-    production_countries = (
-        last.select("movie_id", F.explode("countries_arr").alias("e"))
-        .select("movie_id", F.col("e.iso_3166_1").alias("iso"))
-        .filter(F.col("iso").isNotNull())
-        .join(F.broadcast(country_ids), "iso")
-        .select("movie_id", "country_id")
-        .distinct()
+    countries = _coded(
+        _occurrences(parsed, ["countries_arr"], code="iso_3166_1", name="name"), "_idx", "_pos"
     )
 
     # ---- movies fact: cleansing (A4) + surrogate lookups -----------------
@@ -266,26 +230,32 @@ def build_movie_tables(movies_raw: DataFrame) -> dict[str, DataFrame]:
         positive_bigint_or_null(F.col("revenue")).alias("revenue"),
         positive_double_or_null(F.col("popularity")).alias("popularity"),
         positive_int_trunc_or_null(F.col("runtime")).alias("runtime"),
-        F.col("original_language").alias("_orig_iso"),
+        F.col("original_language").alias("code"),
         F.col("collection.id").alias("belongs_to_collection"),
         F.when(F.length("overview") > 0, F.col("overview")).alias("overview"),  # D2
     ).join(
-        F.broadcast(lang_ids.withColumnRenamed("language_id", "original_language")),
-        F.col("_orig_iso") == F.col("iso"),
+        F.broadcast(languages.select("code", F.col("id").alias("original_language"))),
+        "code",
         "left",
-    ).drop("iso", "_orig_iso")
+    ).drop("code")
 
     return {
         "movies": movies,  # rating joined later (A15)
-        "genres": genres,
-        "languages": languages,
-        "collections": collections,
-        "countries": countries,
-        "production_companies": companies,
-        "movies_genres": movies_genres,
-        "spoken_languages": spoken_languages,
-        "production_countries": production_countries,
-        "movies_production_companies": movies_companies,
+        "genres": first_wins("genres_arr"),
+        "languages": languages.select("id", F.col("code").alias("lang_key"), "name"),
+        "collections": _first(
+            _occurrences(parsed, [F.col("collection")], id="id", name="name"), "id", "_idx"
+        ).select("id", "name"),
+        "countries": countries.select("id", "code", "name"),
+        "production_companies": first_wins("companies_arr"),
+        "movies_genres": _bridge(last, "genres_arr", "id", "genre_id"),
+        "spoken_languages": _bridge(last, "spoken_arr", "iso_639_1", "language_id", languages),
+        "production_countries": _bridge(
+            last, "countries_arr", "iso_3166_1", "country_id", countries
+        ),
+        "movies_production_companies": _bridge(
+            last, "companies_arr", "id", "production_company_id"
+        ),
     }
 
 
@@ -297,24 +267,10 @@ def build_credit_tables(credits_raw: DataFrame) -> dict[str, DataFrame]:
 
     # person registry: ALL rows, crew (phase 0) before cast (phase 1) within
     # a row, first occurrence wins (`loader.py:264-265,:272-273`)
-    crew_occ = parsed.select(
-        "_idx", F.lit(0).alias("_phase"), F.posexplode_outer("crew_arr").alias("_pos", "e")
-    ).select("_idx", "_phase", "_pos", F.col("e.id").alias("id"), F.col("e.name").alias("name"))
-    cast_occ = parsed.select(
-        "_idx", F.lit(1).alias("_phase"), F.posexplode_outer("cast_arr").alias("_pos", "e")
-    ).select("_idx", "_phase", "_pos", F.col("e.id").alias("id"), F.col("e.name").alias("name"))
-    persons = (
-        crew_occ.unionByName(cast_occ)
-        .filter(F.col("id").isNotNull())
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("id").orderBy("_idx", "_phase", "_pos")
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .select("id", "name")
-    )
+    persons = _first(
+        _occurrences(parsed, ["crew_arr", "cast_arr"], id="id", name="name"),
+        "id", "_idx", "_phase", "_pos",
+    ).select("id", "name")
 
     # Duplicate credits rows for a movie: last NON-EMPTY row wins, and crew
     # and cast are tracked independently (`loader.py:256,:266-267,:275-276`
@@ -322,39 +278,25 @@ def build_credit_tables(credits_raw: DataFrame) -> dict[str, DataFrame]:
     # `len(crew.keys()) > 0`, i.e. at least one entry carries a job, and
     # `cast_dict[movie] = cast` when `len(cast) > 0`). A later duplicate row
     # with an empty cast must NOT wipe an earlier row's cast.
-    def last_row(pred):
-        w = Window.partitionBy("movie_id").orderBy(F.col("_idx").desc())
-        return (
-            parsed.filter(pred)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-        )
-
-    crew_last = last_row(F.exists("crew_arr", lambda e: e["has_job"]))
-    cast_last = last_row(F.size("cast_arr") > 0)
-
-    crew_by_job = (
-        crew_last.select("movie_id", F.explode("crew_arr").alias("e"))
+    last_desc = F.col("_idx").desc()
+    crew = (
+        _first(parsed.filter(F.exists("crew_arr", lambda e: e["has_job"])), "movie_id", last_desc)
+        .select("movie_id", F.explode("crew_arr").alias("e"))
         .filter(F.col("e.has_job") & F.col("e.id").isNotNull())
-        .groupBy("movie_id", F.col("e.job").alias("job"))
-        .agg(F.collect_set("e.id").alias("person_ids"))
     )
+    cast_last = _first(parsed.filter(F.size("cast_arr") > 0), "movie_id", last_desc)
 
+    crew_by_job = crew.groupBy("movie_id", F.col("e.job").alias("job")).agg(
+        F.collect_set("e.id").alias("person_ids")
+    )
     directors = (
-        crew_last.select("movie_id", F.explode("crew_arr").alias("e"))
-        .filter(F.col("e.has_job") & (F.col("e.job") == "Director") & F.col("e.id").isNotNull())
+        crew.filter(F.col("e.job") == "Director")
         .select("movie_id", F.col("e.id").alias("director_id"))
         .distinct()
     )
-
     # cast is an ordered LIST — duplicates preserved (ref A12)
-    actors = (
-        cast_last.select("movie_id", F.explode("cast_arr").alias("e"))
-        .select(
-            F.col("e.id").alias("person_id"),
-            "movie_id",
-            F.col("e.order").alias("order_id"),
-        )
+    actors = cast_last.select("movie_id", F.explode("cast_arr").alias("e")).select(
+        F.col("e.id").alias("person_id"), "movie_id", F.col("e.order").alias("order_id")
     )
 
     return {
@@ -368,18 +310,9 @@ def build_credit_tables(credits_raw: DataFrame) -> dict[str, DataFrame]:
 def build_keyword_tables(keywords_raw: DataFrame) -> dict[str, DataFrame]:
     kw = _valid_id(keywords_raw, "id", "movie_id")
     parsed = parse_nested(kw, ["movie_id", "_idx"], keywords_arr=("keywords", ID_NAMES))
-    occ = parsed.select(
-        "movie_id", "_idx", F.posexplode_outer("keywords_arr").alias("_pos", "e")
-    ).select(
-        "movie_id", "_idx", "_pos", F.col("e.id").alias("keyword_id"), F.col("e.name").alias("name")
-    ).filter(F.col("keyword_id").isNotNull())
-
-    keywords = (
-        occ.withColumn(
-            "_rn", F.row_number().over(Window.partitionBy("keyword_id").orderBy("_idx", "_pos"))
-        )
-        .filter(F.col("_rn") == 1)
-        .select(F.col("keyword_id").alias("id"), F.col("name").alias("keyword"))
+    occ = _occurrences(parsed, ["keywords_arr"], keyword_id="id", name="name")
+    keywords = _first(occ, "keyword_id", "_idx", "_pos").select(
+        F.col("keyword_id").alias("id"), F.col("name").alias("keyword")
     )
     # UNION across every occurrence — including duplicate movie rows
     # (`loader.py:302-309`): the inverted index is the bridge, grouped the
@@ -405,14 +338,9 @@ def build_rating_avg(ratings_raw: DataFrame) -> DataFrame:
     )
 
 
-def build_all_tables(
-    spark: SparkSession, base_dir: str | None = None, inputs: dict[str, DataFrame] | None = None
-) -> dict[str, DataFrame]:
+def build_all_tables(spark: SparkSession, base_dir: str) -> dict[str, DataFrame]:
     """The full 15-table build (ref `main`, `loader.py:549-607`)."""
-    if inputs is None:
-        if base_dir is None:
-            raise ValueError("need base_dir or inputs")
-        inputs = load_inputs(spark, base_dir)
+    inputs = load_inputs(spark, base_dir)
 
     # Each builder fills its table's parse cache (one task per multiLine
     # file) before it returns, so the three run side by side.
@@ -430,8 +358,5 @@ def build_all_tables(
     movies = out["movies"].join(
         F.broadcast(rating_avg), out["movies"].id == rating_avg.movie_id, "left"
     ).drop("movie_id")  # ref A15: movies keep NULL rating when absent
-    out["movies"] = movies.select(
-        "id", "title", "release_date", "budget", "revenue", "popularity",
-        "runtime", "rating", "original_language", "belongs_to_collection", "overview",
-    )
+    out["movies"] = movies.select("id", *(c for c, _ in TABLES_BY_NAME["movies"].columns))
     return out

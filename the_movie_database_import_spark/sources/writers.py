@@ -2,9 +2,10 @@
 
 The reference bulk-loads PostgreSQL with 50k-row ``executemany`` batches
 under disabled FK triggers because it writes bridges before their dimension
-targets (`loader.py:339-353,:67-78,:597-605`). Here the write ORDER is fixed
-instead — dimensions before facts before bridges — so constraints can stay
-on (deviation D4), and batching maps to the JDBC writer's ``batchsize``.
+targets (`loader.py:339-353,:67-78,:597-605`). Here the write ORDER is the
+``sources/schema.TABLES`` registry order, in which every table follows the
+tables its FKs reference, so constraints can stay on (deviation D4), and
+batching maps to the JDBC writer's ``batchsize``.
 """
 
 from __future__ import annotations
@@ -13,15 +14,11 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, functions as F
 
+from .schema import TABLES
+
 # FK-safe write order (contrast ref B3: bridges-before-dims under disabled
-# triggers): dims → fact → bridges.
-JDBC_WRITE_ORDER = (
-    "genres", "languages", "collections", "persons", "countries",
-    "production_companies", "keywords",
-    "movies",
-    "movies_genres", "spoken_languages", "production_countries",
-    "movies_production_companies", "movies_keywords", "directors", "actors",
-)
+# triggers): the registry's create order.
+JDBC_WRITE_ORDER = tuple(t.name for t in TABLES)
 
 DEFAULT_BATCH_SIZE = 50_000  # db_config.json:6
 

@@ -96,10 +96,10 @@ def _seq(jseq) -> list:
     return [jseq.apply(i) for i in range(jseq.size())]
 
 
-def plan_counts(df) -> dict[str, int]:
-    """Node and ``array_intersect`` counts of ``df``'s pre-execution plan."""
-    counts = dict.fromkeys(COLUMNS, 0)
-    counts.pop("build_jobs")
+def plan_counts(df, nodes: dict[str, str] = NODE_COLUMNS) -> dict[str, int]:
+    """Node and ``array_intersect`` counts of ``df``'s pre-execution plan;
+    ``nodes`` maps each counted physical node name to its column."""
+    counts = dict.fromkeys((*nodes.values(), "python_eval", "array_intersect"), 0)
     stack = [df._jdf.queryExecution().executedPlan()]
     while stack:
         node = stack.pop()
@@ -111,8 +111,8 @@ def plan_counts(df) -> dict[str, int]:
             stack.append(node.cachedPlan())
             continue
         name = node.nodeName()
-        if name in NODE_COLUMNS:
-            counts[NODE_COLUMNS[name]] += 1
+        if name in nodes:
+            counts[nodes[name]] += 1
         elif _PYTHON_NODE.search(name):
             counts["python_eval"] += 1
         counts["array_intersect"] += node.simpleString(_MAX_FIELDS).count(
