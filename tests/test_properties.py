@@ -312,11 +312,7 @@ def nested_cell(is_list: bool):
     )
 
 
-# data_too_large: an example draws 20-60 rows of six nested cells each, and
-# some runs overrun Hypothesis's per-example buffer often enough to fail the
-# health check before any assertion runs; overrun draws are discarded, and
-# every example that completes is checked in full.
-@settings(SETTINGS, suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large])
+@SETTINGS
 @given(data=st.data())
 def test_native_or_fallback_parse_matches_literal_eval_path(spark, data):
     """For all six shapes, the native-or-fallback parse equals the
